@@ -62,8 +62,7 @@ object SnapProbe {
     val added = v3.map(_.path).toSet -- v2.map(_.path).toSet
     println(f"SNAPPROBE_SQLWRITE insert1part(rows=$deltaRows)=${sqlSecs}%.2fs " +
       f"addedFiles=${added.size} " +
-      f"carriedFiles=${v3.map(_.path).toSet.intersect(v2.map(_.path).toSet).size}/${v2.size} " +
-      f"driverFooters=${t.lastCommitDriverFooters}")
+      f"carriedFiles=${v3.map(_.path).toSet.intersect(v2.map(_.path).toSet).size}/${v2.size}")
 
     // metadata aggregate vs real scan (round 7): COUNT(*) from manifests
     // opens zero data files — compare against the same count forced
@@ -114,8 +113,7 @@ object SnapProbe {
         .load().count())
     println(f"SNAPPROBE_MOR upsert1part(rows=$deltaRows)=${morSecs}%.2fs " +
       f"(vs COW ${upSecs}%.2fs) rows=$morCnt morRead=${morReadSecs}%.2fs " +
-      f"compactFold=${foldSecs}%.2fs cleanRead=${cleanReadSecs}%.2fs " +
-      f"driverFooters=${tm.lastCommitDriverFooters}")
+      f"compactFold=${foldSecs}%.2fs cleanRead=${cleanReadSecs}%.2fs")
     spark.stop()
   }
 }

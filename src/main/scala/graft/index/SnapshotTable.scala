@@ -11,19 +11,31 @@ import scala.jdk.CollectionConverters._
  * checkpoint with per-partition lineage + metrics" contract in an offline
  * container (no Iceberg jar; SURVEY.md §"No Iceberg jar").
  *
- * Layout (round-5: PAGED manifests — Iceberg's manifest-list/manifest split,
- * closing round-4's one `weak` item, the single driver-parsed JSON manifest):
+ * Layout (Iceberg's manifest-list/manifest split):
  * {{{
  *   <root>/v<N>-<uuid>/part=<p>/part-*.parquet  data files of version N's WRITE
- *   <root>/m-<uuid>.jsonl                       MANIFEST: one JSON line per data
- *                                               file (path, part, rows, bytes,
- *                                               stats bounds); covers a bounded
- *                                               partition range
+ *   <root>/m-<uuid>.jsonl                       MANIFEST PAGE: one JSON line per
+ *                                               data file (path, part, rows,
+ *                                               bytes, stats bounds, kind, seq);
+ *                                               covers a bounded partition range
  *   <root>/snap-<N>.json                        MANIFEST LIST: tiny — one entry
- *                                               per manifest (path + partition /
+ *                                               per page (path + partition /
  *                                               stats bounds + counts)
- *   <root>/schema.json                          table schema, written at init
+ *   <root>/schema.json, stats.json              read-order schema and stats
+ *                                               column, written at creation
  * }}}
+ *
+ * ONE CODEC: page lines and list entries are encoded and decoded only by
+ * the companion's codec ([[SnapshotTable.encodeEntry]]/
+ * [[SnapshotTable.readPage]], [[SnapshotTable.encodeMeta]]/
+ * [[SnapshotTable.readList]]). The driver's page reads, the distributed
+ * planning arm and the [[filesMeta]] inventory all decode through it, and
+ * it throws on any line it cannot parse, naming the file and the line.
+ * ONE WRITER: every data file, whatever commit references it, is written by
+ * [[SnapDataWriter]], which records each file's rows, bytes and stats
+ * bounds while writing — no commit reads a parquet footer.
+ * The root is normalised once, at construction, so every page, attempt
+ * dir and file entry the table derives has one spelling.
  *
  * Key properties, mirroring Iceberg semantics:
  *  - **Copy-on-write MERGE**: [[upsert]] rewrites ONLY the partitions the
@@ -36,10 +48,9 @@ import scala.jdk.CollectionConverters._
  *    by their bounds BEFORE listing any file, and a commit carries
  *    untouched manifests by reference — at 10^12 docs the driver re-reads
  *    the covering manifests of the touched region, never an O(#files)
- *    world list. Manifests are JSONL precisely so they are also
- *    Spark-readable: [[filesMeta]] exposes the full file inventory as a
- *    DataFrame (Iceberg's `.files` metadata table) without ever
- *    materialising it on the driver.
+ *    world list. [[filesMeta]] exposes the full file inventory as a
+ *    DataFrame (Iceberg's `.files` metadata table), decoded in executor
+ *    tasks, without ever materialising it on the driver.
  *  - **Snapshot isolation / time travel**: [[read]] of version N resolves
  *    the manifest's exact file list — concurrent readers of N are unaffected
  *    by later upserts, and historic versions stay readable until [[expire]].
@@ -58,10 +69,18 @@ import scala.jdk.CollectionConverters._
  * row-level DML) and [[graft.sources.GraftCatalog]] (DDL, time travel,
  * maintenance procedures).
  */
-class SnapshotTable(spark: SparkSession, root: String,
+class SnapshotTable(spark: SparkSession, tableRoot: String,
     statsCol: Option[String] = None, manifestTargetFiles: Int = 64) {
 
   import SnapshotTable.{FileEntry, ManifestMeta}
+
+  /** The root in its one spelling (absolute, no `.`/`..`, no doubled or
+    * trailing slash): expire's liveness test compares file paths from the
+    * manifests with directory listings, so every derived path must agree. */
+  private val root: String = Paths.get(tableRoot).toAbsolutePath.normalize.toString
+  // the manifest codec writes paths unescaped, one page entry per line
+  require(!root.exists(c => c == '"' || c < ' '),
+    s"snapshot table root must not contain a double quote or a control character: $root")
 
   /**
    * The table's EFFECTIVE stats column. The value persisted at [[init]]
@@ -94,32 +113,13 @@ class SnapshotTable(spark: SparkSession, root: String,
     }
   }
 
-  // ---- manifest list (snap-N.json): tiny, one line, O(#manifests) ----
-
-  private val metaRe =
-    ("""\{"path":"([^"]+)","part_lo":(-?\d+),"part_hi":(-?\d+),"files":(\d+),""" +
-     """"rows":(\d+)(?:,"lo":(-?\d+),"hi":(-?\d+))?\}""").r
-
   /** The manifest list of snapshot v — O(#manifests) driver cost.
     * Version 0 is the EMPTY table (a catalog-created table before its
     * first commit): no snapshot file, no manifests. */
   def manifestList(v: Int): Seq[ManifestMeta] =
-    if (v <= 0) Seq.empty
-    else metaRe.findAllMatchIn(Files.readString(snapPath(v)))
-      .map(m => ManifestMeta(m.group(1), m.group(2).toLong, m.group(3).toLong,
-        m.group(4).toInt, m.group(5).toLong,
-        Option(m.group(6)).map(_.toLong), Option(m.group(7)).map(_.toLong)))
-      .toSeq
+    if (v <= 0) Seq.empty else SnapshotTable.readList(snapPath(v))
 
-  // ---- manifests (m-<uuid>.jsonl): one line per data file, streamed ----
-
-  private val fileRe =
-    ("""\{"path":"([^"]+)","part":(-?\d+),"rows":(\d+),"bytes":(\d+)""" +
-     """(?:,"lo":(-?\d+),"hi":(-?\d+))?(?:,"nulls":(\d+))?""" +
-     """(?:,"kind":"(x)")?(?:,"seq":(\d+))?\}""").r
-
-  /** Stream one manifest's file entries (line-at-a-time; the whole page is
-    * never held as a single string). Manifest pages are IMMUTABLE and
+  /** One manifest page's file entries. Manifest pages are IMMUTABLE and
     * uniquely named (m-<uuid>.jsonl), so parsed pages are memoised in the
     * process-wide [[SnapshotTable.pageCache]] (Iceberg's manifest caching):
     * the per-plan driver cost of a repeatedly-planned scan drops from
@@ -129,16 +129,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     * lines physically PARSED, which the full-scan planning pin bounds. */
   private def readManifest(path: String): Seq[FileEntry] = {
     val entries = SnapshotTable.pageCache.getOrElse(path, {
-      val s = Files.lines(Paths.get(path))
-      val parsed = try {
-        s.iterator().asScala.flatMap(line =>
-          fileRe.findFirstMatchIn(line).map(m =>
-            FileEntry(m.group(1), m.group(2).toLong, m.group(3).toLong, m.group(4).toLong,
-              Option(m.group(5)).map(_.toLong), Option(m.group(6)).map(_.toLong),
-              Option(m.group(7)).map(_.toLong),
-              if (m.group(8) == null) "d" else "x",
-              Option(m.group(9)).fold(0)(_.toInt)))).toSeq
-      } finally s.close()
+      val parsed = SnapshotTable.readPage(path)
       driverParseCounter.set(driverParseCounter.get() + parsed.size)
       SnapshotTable.pageCache.put(path, parsed)
       parsed
@@ -217,7 +208,7 @@ class SnapshotTable(spark: SparkSession, root: String,
       val p = s"$root/m-${java.util.UUID.randomUUID().toString.take(12)}.jsonl"
       Files.createDirectories(Paths.get(root))
       val w = Files.newBufferedWriter(Paths.get(p))
-      try page.foreach { f => w.write(fileJson(f)); w.newLine() }
+      try page.foreach { f => w.write(SnapshotTable.encodeEntry(f)); w.newLine() }
       finally w.close()
       // page bounds are defined ONLY when every entry carries bounds: a
       // bound-less file (all-NULL stats column) matches every readRange at
@@ -237,17 +228,6 @@ class SnapshotTable(spark: SparkSession, root: String,
       ManifestMeta(p, pLo, pHi, page.size, page.map(_.rows).sum, lo, hi)
     }.toSeq
 
-  private def fileJson(f: FileEntry): String = {
-    val stats = (f.lo, f.hi) match {
-      case (Some(l), Some(h)) => s""","lo":$l,"hi":$h"""
-      case _ => ""
-    }
-    val nulls = f.nulls.fold("")(n => s""","nulls":$n""")
-    val kind = if (f.isDelete) s""","kind":"x"""" else ""
-    val seq = if (f.seq > 0) s""","seq":${f.seq}""" else ""
-    s"""{"path":"${f.path}","part":${f.part},"rows":${f.rows},"bytes":${f.bytes}$stats$nulls$kind$seq}"""
-  }
-
   /** The exact data-file set of snapshot v (diagnostic/test API — this one
     * IS O(#files) on the driver by definition; the read path never calls
     * it, it prunes manifests instead). */
@@ -264,70 +244,32 @@ class SnapshotTable(spark: SparkSession, root: String,
   }
 
   /** The file inventory of snapshot v AS A DATAFRAME (Iceberg's `.files`
-    * metadata table): the manifests are read through Spark's JSON source,
-    * so whole-inventory analytics (file-size histograms, lineage rollups)
-    * never materialise O(#files) on the driver. */
+    * metadata table): one [[FileEntry]] row per data or delete file, the
+    * pages decoded by the codec in executor tasks, so whole-inventory
+    * analytics (file-size histograms, lineage rollups) never materialise
+    * O(#files) on the driver. */
   def filesMeta(version: Int = -1): DataFrame = {
     val v = if (version < 0) currentVersion else version
     invDf(manifestList(v).map(_.path))
   }
 
-  /** Manifest pages read THROUGH Spark's JSON source as a file-inventory
-    * DataFrame — the building block for [[filesMeta]] and the distributed
-    * [[compact]]/[[expire]] planners (O(#files) never touches the driver). */
-  private def invDf(manifestPaths: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("path", StringType), StructField("part", LongType),
-      StructField("rows", LongType), StructField("bytes", LongType),
-      StructField("lo", LongType), StructField("hi", LongType),
-      StructField("kind", StringType), StructField("seq", LongType)))
-    if (manifestPaths.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema)
-    else spark.read.schema(schema).json(manifestPaths: _*)
-  }
-
-  /** Parse manifest pages in a SPARK JOB and populate the process-wide
-    * page cache — the distributed arm of wide-scan planning: executors do
-    * the JSON work, the driver collects only the finished entry rows
-    * (which planning must hold anyway). Page attribution rides
-    * `input_file_name()`. */
-  private def distributedPageLoad(paths: Seq[String]): Unit = {
-    if (paths.isEmpty) return
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("path", StringType), StructField("part", LongType),
-      StructField("rows", LongType), StructField("bytes", LongType),
-      StructField("lo", LongType), StructField("hi", LongType),
-      StructField("nulls", LongType), StructField("kind", StringType),
-      StructField("seq", LongType)))
-    val rows = spark.read.schema(schema).json(paths: _*)
-      .withColumn("__page", org.apache.spark.sql.functions.input_file_name())
-      .collect()
-    val byPage = rows.groupBy(r => java.net.URI.create(r.getString(9)).getPath)
-    paths.foreach { p =>
-      val entries = byPage.getOrElse(p, Array.empty[Row]).toSeq.map { r =>
-        FileEntry(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          if (r.isNullAt(4)) None else Some(r.getLong(4)),
-          if (r.isNullAt(5)) None else Some(r.getLong(5)),
-          if (r.isNullAt(6)) None else Some(r.getLong(6)),
-          kind = if (r.isNullAt(7)) "d" else r.getString(7),
-          seq = if (r.isNullAt(8)) 0 else r.getLong(8).toInt)
-      }
-      SnapshotTable.pageCache.put(p, entries)
-    }
-  }
+  /** The entries of `pages` as a DataFrame of [[FileEntry]] rows — the
+    * building block for [[filesMeta]] and the distributed [[compact]]/
+    * [[expire]] planners (O(#files) never touches the driver). */
+  private def invDf(pages: Seq[String]): DataFrame =
+    spark.createDataset(spark.sparkContext
+      .parallelize(pages, math.max(1, math.min(pages.size, spark.sparkContext.defaultParallelism)))
+      .flatMap(p => SnapshotTable.readPage(p)))(
+      org.apache.spark.sql.Encoders.product[FileEntry]).toDF()
 
   /** Write an ATTEMPT dir for version vN from `df` (must carry a long
     * `part` column) and return its file entries. The dir name carries a
     * unique attempt id: two racing writers of the same version never share
-    * a directory (so neither's manifest-stats job can see the other's
-    * files), and a writer that crashes before commit leaves only an orphan
-    * attempt dir — it can never wedge the next committer's path (and
+    * a directory, and a writer that crashes before commit leaves only an
+    * orphan attempt dir — it can never wedge the next committer's path (and
     * [[expire]]'s orphan sweep eventually collects it). The part value
     * rides both the directory AND the `_part` data column. */
   private def writeVersionDir(df: DataFrame, v: Int): Seq[FileEntry] = {
-    val dir = attemptDir(v)
     // ONE shuffle clusters each `part` into one task before the write — the
     // DSv2 write path's requiredDistribution (Iceberg's hash distribution
     // mode), applied to the programmatic commits: without it an N-task
@@ -340,72 +282,16 @@ class SnapshotTable(spark: SparkSession, root: String,
     // is preserved as-is.
     // The old persist() + isEmpty probe double-materialised every commit
     // (the columnar-cache build alone measured ~10 executor-CPU-s per
-    // 32-task commit in the r8 profile); the write is now the single
-    // evaluation and an empty input simply yields no files below.
+    // 32-task commit in the r8 profile); the write is the single
+    // evaluation and an empty input simply yields no files.
     val out = if (statsColumn.isEmpty) df.repartition(col("part")) else df
-    out.withColumn("_part", col("part"))
-      .write.partitionBy("part").parquet(dir)
     // stamp the entries with the commit SEQUENCE (the attempt's version):
     // equality deletes apply only to data files with a strictly smaller seq
-    // (an empty write leaves only _SUCCESS — no entries, and the husk dir
-    // is collected by expire()'s orphan sweep)
-    statsEntries(dir).map(_.copy(seq = v))
+    SnapDataWriter.writeAll(out, attemptDir(v), statsColumn).map(_.copy(seq = v))
   }
 
   private def attemptDir(v: Int): String =
     s"$root/v$v-${java.util.UUID.randomUUID().toString.take(8)}"
-
-  /** Per-file row counts and (when tracked) stats-column bounds for an
-    * attempt dir — the manifest stats an Iceberg writer records at commit.
-    * FOOTER-ONLY: counts and column min/max come from the parquet metadata
-    * the write just produced, so a commit never RE-SCANS the data it wrote.
-    *
-    * DISTRIBUTED (round-6 verdict #1, the last metadata scale-killer): the
-    * driver lists the attempt dir's PATHS, ships them as a Spark job, and
-    * collects only the (path, part, rows, bytes, lo, hi) entry rows —
-    * every parquet footer is opened in an EXECUTOR task
-    * ([[SnapshotTable.footerEntry]]), never on the driver (the previous
-    * version ran the footer reads on a driver thread pool: O(#delta-files)
-    * driver I/O per commit). Pinned by [[lastCommitDriverFooters]] == 0.
-    * Reference role: the store's write path kept stats server-side
-    * (`OsmStorageService.scala:186-198`). */
-  private def statsEntries(dir: String): Seq[FileEntry] = {
-    val walk = Files.walk(Paths.get(dir))
-    val files = try walk.iterator().asScala.filter(p =>
-      Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet") &&
-        !p.getFileName.toString.startsWith(".")).map(_.toString).toSeq
-    finally walk.close()
-    if (files.isEmpty) Seq.empty
-    else {
-      // SerializableWritable ships the session's hadoop conf to the tasks
-      // (on a real cluster the attempt dir lives on the shared filesystem
-      // that conf describes); the closure captures only it, the stats
-      // column name, and the path slice — never the table handle/session
-      val conf = new org.apache.spark.SerializableWritable(
-        spark.sessionState.newHadoopConf())
-      val statsColLocal = statsColumn
-      val slices = math.min(files.size, math.max(1, spark.sparkContext.defaultParallelism))
-      spark.sparkContext.parallelize(files, slices)
-        .map(f => SnapshotTable.footerEntry(f, statsColLocal, conf.value))
-        .collect().toSeq.sortBy(_.path)
-    }
-  }
-
-  /** THE COMMIT-PATH SCALE PIN (round-6's one `weak`, closed): parquet
-    * footers the LAST commit-producing call ([[init]]/[[upsert]]/
-    * [[delete]]/[[compact]]) opened ON THE DRIVER THREAD. Footer harvest
-    * runs as a Spark job, so this must be 0 — executor task threads carry
-    * their own counters and cannot leak into the commit thread's window
-    * (the [[lastMaintenanceDriverEntries]] pattern, extended to commits). */
-  @volatile private var commitFooters: Long = 0
-  def lastCommitDriverFooters: Long = commitFooters
-
-  private def recordingCommit[A](body: => A): A = {
-    val before = SnapshotTable.footerOpens.get()
-    val r = body
-    commitFooters = SnapshotTable.footerOpens.get() - before
-    r
-  }
 
   /** Split the parent snapshot's manifests around a touched-partition set:
     * manifests whose bounds miss `touched` (or whose actual entries do)
@@ -453,14 +339,7 @@ class SnapshotTable(spark: SparkSession, root: String,
 
   private def commit(v: Int, parent: Int, manifests: Seq[ManifestMeta],
       extra: String = ""): Unit = {
-    val listJson = manifests.map { m =>
-      val stats = (m.lo, m.hi) match {
-        case (Some(l), Some(h)) => s""","lo":$l,"hi":$h"""
-        case _ => ""
-      }
-      s"""{"path":"${m.path}","part_lo":${m.partLo},"part_hi":${m.partHi},""" +
-        s""""files":${m.files},"rows":${m.rows}$stats}"""
-    }.mkString("[", ",", "]")
+    val listJson = manifests.map(SnapshotTable.encodeMeta).mkString("[", ",", "]")
     Files.createDirectories(Paths.get(root))
     // optimistic concurrency (Iceberg's commit rule): creating the snapshot
     // file is the atomic commit point — a concurrent writer that already
@@ -547,7 +426,7 @@ class SnapshotTable(spark: SparkSession, root: String,
    */
   private[graft] def commitFilesEpoch(entries: Seq[FileEntry],
       mode: SnapshotTable.WriteMode, queryId: String, epochId: Long,
-      maxRaces: Int = 5): Int = recordingCommit {
+      maxRaces: Int = 5): Int = {
     require(currentVersion > 0 || Files.exists(schemaPath),
       "create/init the snapshot table before streaming writes")
     def deleteAll(pages: Seq[ManifestMeta]): Unit = {
@@ -594,15 +473,9 @@ class SnapshotTable(spark: SparkSession, root: String,
   /** Initial load: full write of `df` as snapshot 1. `df` must carry a
     * long `part` column (the partition key). Persists the table schema so
     * an empty (or fully-deleted) version stays readable. */
-  def init(df: DataFrame): Int = recordingCommit {
+  def init(df: DataFrame): Int = {
     require(currentVersion == 0, s"table at $root already initialised")
-    Files.createDirectories(Paths.get(root))
-    // persisted in READ order (data columns, then `part` re-appended) so an
-    // empty selection unions cleanly with a non-empty one
-    val readOrder = org.apache.spark.sql.types.StructType(
-      df.schema.fields.filterNot(_.name == "part") ++ df.schema.fields.filter(_.name == "part"))
-    Files.writeString(schemaPath, readOrder.json)
-    SnapshotTable.writeStatsMeta(root, statsColumn)
+    SnapshotTable.persistSchema(root, df.schema, statsColumn)
     val files = writeVersionDir(df, 1)
     val manifests = writeManifests(files)
     commitOrCleanup(1, 0, manifests, files, manifests)
@@ -625,7 +498,7 @@ class SnapshotTable(spark: SparkSession, root: String,
    * re-derives a key's partition differently does not retire the old
    * partition's row — that is an insert of a new identity, not an update.
    */
-  def upsert(delta: DataFrame, keyCols: Seq[String], basedOn: Option[Int] = None): Int = recordingCommit {
+  def upsert(delta: DataFrame, keyCols: Seq[String], basedOn: Option[Int] = None): Int = {
     val cur = currentVersion
     require(cur > 0, "init() before upsert()")
     // compare-and-swap: a merge prepared against `basedOn` must not commit
@@ -676,12 +549,11 @@ class SnapshotTable(spark: SparkSession, root: String,
    * `basedOn` (captured when the SQL write was planned) and commits
    * `basedOn + 1` — a rival that committed first makes CREATE_NEW fail,
    * [[commitOrCleanup]] deletes the loser's fresh files and pages, and
-   * the statement must be re-run against the new state. The footer-free
-   * entry stats arrive from the writers, so [[lastCommitDriverFooters]]
-   * stays 0 and [[SnapshotTable.totalFooterOpens]] does not move at all.
+   * the statement must be re-run against the new state. The entry stats
+   * arrive from the writers ([[SnapDataWriter]]).
    */
   private[graft] def commitFiles(entries: Seq[FileEntry],
-      mode: SnapshotTable.WriteMode, basedOn: Int): Int = recordingCommit {
+      mode: SnapshotTable.WriteMode, basedOn: Int): Int = {
     val cur = basedOn
     // basedOn == 0 is a catalog-created EMPTY table's first commit (its
     // schema was persisted at CREATE TABLE); an uncreated root still fails
@@ -716,7 +588,7 @@ class SnapshotTable(spark: SparkSession, root: String,
    * the set. A no-match rewrite (both empty) commits nothing.
    */
   private[graft] def commitReplacingParts(entries: Seq[FileEntry], touched: Set[Long],
-      basedOn: Int): Int = recordingCommit {
+      basedOn: Int): Int = {
     require(basedOn > 0 || Files.exists(schemaPath),
       "create/init the snapshot table before row-level SQL writes")
     if (entries.isEmpty && touched.isEmpty) basedOn
@@ -756,16 +628,22 @@ class SnapshotTable(spark: SparkSession, root: String,
     openedManifests.set(covering.map(_.path))
     // DISTRIBUTED PLANNING for wide first-time scans (round-7's one
     // `weak`): when the covering pages' UNCACHED entry estimate exceeds
-    // the threshold, parse them in a Spark job over Spark's JSON source
-    // (the statsEntries pattern) and collect the entry ROWS — the driver
-    // holds the pruned file list either way (DSv2 planInputPartitions
-    // needs it), but never pays O(#entries) JSON parse per plan. The
-    // parsed pages land in the immutable page cache, so every LATER plan
-    // of any scan over them is a pure lookup (Iceberg's manifest caching).
+    // the threshold, executor tasks decode them with the same codec and
+    // the driver collects the entries keyed by the exact path string the
+    // manifest list holds — the driver holds the pruned file list either
+    // way (DSv2 planInputPartitions needs it), but never pays O(#entries)
+    // JSON parse per plan. The decoded pages land in the immutable page
+    // cache, so every LATER plan of any scan over them is a pure lookup
+    // (Iceberg's manifest caching).
     val parse0 = driverParseCounter.get()
     val uncached = covering.filterNot(m => SnapshotTable.pageCache.contains(m.path))
-    if (uncached.map(_.files.toLong).sum > SnapshotTable.distributedPlanThreshold)
-      distributedPageLoad(uncached.map(_.path))
+    if (uncached.map(_.files.toLong).sum > SnapshotTable.distributedPlanThreshold) {
+      val paths = uncached.map(_.path)
+      spark.sparkContext
+        .parallelize(paths, math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism)))
+        .map(p => p -> SnapshotTable.readPage(p)).collect()
+        .foreach { case (p, es) => SnapshotTable.pageCache.put(p, es) }
+    }
     val (del0, files0) = covering.flatMap(m => readManifest(m.path))
       .partition(_.isDelete)
     planParsedLines = driverParseCounter.get() - parse0
@@ -839,10 +717,13 @@ class SnapshotTable(spark: SparkSession, root: String,
   // ---- merge-on-read equality deletes (Iceberg v2's delete files) ----
 
   /** The single long IDENTITY column MOR equality deletes key on,
-    * persisted at the first [[deleteKeysMor]] (mor.json). */
+    * persisted at the first [[deleteKeysMor]] (mor.json). A mor.json that
+    * is not a regular file names no key: reads of a table without delete
+    * entries stay answerable, and any delete entry then fails loudly
+    * ([[deleteKeysDf]], the DSv2 slice planner) for want of a key. */
   def morKey: Option[String] = {
     val p = Paths.get(s"$root/mor.json")
-    if (!Files.exists(p)) None
+    if (!Files.isRegularFile(p)) None
     else """"key":"([^"]+)"""".r.findFirstMatchIn(Files.readString(p)).map(_.group(1))
   }
 
@@ -860,7 +741,7 @@ class SnapshotTable(spark: SparkSession, root: String,
    * spec). A key re-inserted AFTER the delete survives it
    * ([[SnapshotTable.deleteApplies]]'s sequence rule).
    */
-  def deleteKeysMor(keys: DataFrame, keyCol: String): Int = recordingCommit {
+  def deleteKeysMor(keys: DataFrame, keyCol: String): Int = {
     val cur = currentVersion
     require(cur > 0, "init() before deleteKeysMor()")
     require(keys.columns.contains(keyCol), s"keys must carry '$keyCol'")
@@ -888,7 +769,7 @@ class SnapshotTable(spark: SparkSession, root: String,
    * delete keys inherit the delta rows' partitions, so pruned reads stay
    * partition-local.
    */
-  def upsertMor(delta: DataFrame, keyCol: String): Int = recordingCommit {
+  def upsertMor(delta: DataFrame, keyCol: String): Int = {
     val cur = currentVersion
     require(cur > 0, "init() before upsertMor()")
     ensureMorKey(keyCol)
@@ -999,7 +880,8 @@ class SnapshotTable(spark: SparkSession, root: String,
   /**
    * MERGE-ON-READ application: anti-join `base` against the delete keys
    * under the sequence rule. Each row's file seq rides a filename→seq map
-   * (file names are unique: part-task-uuid), so keys re-inserted AFTER
+   * keyed by the scan's own `_metadata.file_name` column (file names are
+   * unique: part-task-uuid), so keys re-inserted AFTER
    * the delete (data seq > delete seq) survive. Delete sides are small —
    * Catalyst broadcasts them. `deletes` must already be filtered to the
    * applicable set; empty = no-op.
@@ -1013,9 +895,7 @@ class SnapshotTable(spark: SparkSession, root: String,
         (f.path.substring(f.path.lastIndexOf('/') + 1), f.seq.toLong)).toMap
       val seqMap = org.apache.spark.sql.functions.typedLit(seqByName)
       val withSeq = base.withColumn("__seq",
-        org.apache.spark.sql.functions.element_at(seqMap,
-          regexp_extract(org.apache.spark.sql.functions.input_file_name(),
-            "[^/]+$", 0)))
+        org.apache.spark.sql.functions.element_at(seqMap, col("_metadata.file_name")))
       withSeq.join(deleteKeysDf(deletes),
           withSeq(key) === col("__dk") &&
             (col("__dpart") === lit(SnapshotTable.MOR_GLOBAL) ||
@@ -1060,7 +940,7 @@ class SnapshotTable(spark: SparkSession, root: String,
    * A partition whose every row is deleted vanishes from the new snapshot
    * (no empty files). Returns the new version.
    */
-  def delete(keys: DataFrame, keyCols: Seq[String]): Int = recordingCommit {
+  def delete(keys: DataFrame, keyCols: Seq[String]): Int = {
     val cur = currentVersion
     require(cur > 0, "init() before delete()")
     val next = cur + 1
@@ -1128,7 +1008,7 @@ class SnapshotTable(spark: SparkSession, root: String,
    * `basedOn`, commits `basedOn + 1`, CREATE_NEW decides a race. Returns
    * the new version.
    */
-  private[graft] def deleteParts(touched: Set[Long], basedOn: Int): Int = recordingCommit {
+  private[graft] def deleteParts(touched: Set[Long], basedOn: Int): Int = {
     require(basedOn > 0, "init() before deleteParts()")
     val next = basedOn + 1
     val (carried, _, filteredPages) = splitParent(basedOn, touched)
@@ -1140,7 +1020,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     * references NO manifests (the persisted schema keeps the empty version
     * readable). Metadata-only like [[deleteParts]]; old files await
     * [[expire]]. */
-  private[graft] def truncateAll(basedOn: Int): Int = recordingCommit {
+  private[graft] def truncateAll(basedOn: Int): Int = {
     require(basedOn > 0, "init() before truncateAll()")
     val next = basedOn + 1
     commitOrCleanup(next, basedOn, Seq.empty, Seq.empty, Seq.empty)
@@ -1157,7 +1037,7 @@ class SnapshotTable(spark: SparkSession, root: String,
    * or manifests have been expired fails with a clear error instead of
    * committing dangling references. Returns the new version.
    */
-  def restore(to: Int): Int = recordingCommit {
+  def restore(to: Int): Int = {
     val cur = currentVersion
     require(cur > 0, "init() before restore()")
     require(to >= 1 && to <= cur, s"restore target $to outside [1, $cur]")
@@ -1194,7 +1074,8 @@ class SnapshotTable(spark: SparkSession, root: String,
    * then come from their covering manifests alone ([[splitParent]]), and
    * each rewritten partition's write job is submitted CONCURRENTLY
    * (Iceberg's rewrite action planning file groups) — the jobs write
-   * disjoint `part=` directories of one attempt dir.
+   * disjoint `part=` directories of one attempt dir through
+   * [[SnapDataWriter]], which returns their entries.
    *
    * `maxPartitionsPerRun` bounds ONE maintenance commit (Iceberg's
    * partial-progress rewrite): when a whole 10^6-partition table qualifies
@@ -1205,7 +1086,7 @@ class SnapshotTable(spark: SparkSession, root: String,
    * so successive calls make disjoint progress).
    */
   def compact(maxFiles: Int = 1, targetFileBytes: Long = Long.MaxValue,
-      maxPartitionsPerRun: Int = Int.MaxValue): Int = recordingMaintenance { recordingCommit {
+      maxPartitionsPerRun: Int = Int.MaxValue): Int = recordingMaintenance {
     val cur = currentVersion
     // distributed plan: same arithmetic as the old driver loop — Long/Long
     // division in Spark SQL is double division, matching `.toDouble /`;
@@ -1238,17 +1119,20 @@ class SnapshotTable(spark: SparkSession, root: String,
       // file's seq >= a global delete's seq the delete can never retire a
       // row again — without this sweep the MOR_GLOBAL pseudo-partition's
       // files (which compact never rewrites) survive forever. Bound: the
-      // PARENT snapshot's minimum data seq, computed DISTRIBUTED over
-      // filesMeta (one aggregation row to the driver; rewritten files only
-      // raise the minimum, so the bound is conservative-safe). Only delete
-      // pages (full part range) are opened — O(#delete files), bounded.
+      // minimum seq over the data files that SURVIVE this commit — the
+      // untouched partitions' files (computed DISTRIBUTED over filesMeta,
+      // one aggregation row to the driver) and the rewritten ones, whose
+      // seq is `next` — so a delete this compaction folds everywhere is
+      // dropped by this very commit. Only delete pages (full part range)
+      // are opened — O(#delete files), bounded.
       val (carried, gcFresh) =
         if (morKey.isEmpty || !carried0.exists(_.partLo == Long.MinValue))
           (carried0, Seq.empty[ManifestMeta])
         else {
-          val minRow = filesMeta(cur).filter(col("kind").isNull)
-            .agg(min(coalesce(col("seq"), lit(0L)))).collect().head
-          val minSeq = if (minRow.isNullAt(0)) Long.MaxValue else minRow.getLong(0)
+          val minRow = filesMeta(cur)
+            .filter(col("kind") === "d" && !col("part").isin(plan.keys.toSeq: _*))
+            .agg(min("seq")).collect().head
+          val minSeq = if (minRow.isNullAt(0)) next else math.min(minRow.getInt(0), next)
           val keep = Seq.newBuilder[ManifestMeta]
           val freshB = Seq.newBuilder[ManifestMeta]
           carried0.filter(_.partLo == Long.MinValue).foreach { m =>
@@ -1278,7 +1162,7 @@ class SnapshotTable(spark: SparkSession, root: String,
       val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(8, plan.size))
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try {
+      val newFiles = try {
         // global equality deletes applying to any rewritten partition are
         // folded in here (rewritten files' seq = next leaves them inert)
         val globalDels =
@@ -1290,19 +1174,20 @@ class SnapshotTable(spark: SparkSession, root: String,
             val (delsP, dataP) = byPartTouched(p).partition(_.isDelete)
             val base = applyDeletesPhysical(readPhysical(dataP.map(_.path)),
               dataP, delsP ++ globalDels)
+            // the writer sorts each slice by the stats column
             val sliced = statsColumn match {
               case Some(c) if want > 1 => base.repartitionByRange(want, col(c))
-              case Some(c) => base.coalesce(1).sortWithinPartitions(col(c))
+              case Some(_) => base.coalesce(1)
               case None => base.repartition(want)
             }
-            sliced.write.parquet(s"$dir/part=$p")
+            SnapDataWriter.writeAll(sliced.withColumnRenamed("_part", "part"), dir, statsColumn)
           }
         }
         // FINITE timeout (round-6 ADVICE): one hung rewrite job fails the
         // commit with a diagnostic instead of blocking it forever — the
         // attempt dir it leaves behind is swept by expire()'s orphan rule
         try scala.concurrent.Await.result(scala.concurrent.Future.sequence(jobs),
-          SnapshotTable.MAINTENANCE_TIMEOUT)
+          SnapshotTable.MAINTENANCE_TIMEOUT).flatten.map(_.copy(seq = next))
         catch {
           case e: java.util.concurrent.TimeoutException =>
             throw new IllegalStateException(
@@ -1311,13 +1196,12 @@ class SnapshotTable(spark: SparkSession, root: String,
                 "orphaned and will be collected by expire()", e)
         }
       } finally pool.shutdown()
-      val newFiles = statsEntries(dir).map(_.copy(seq = next))
       val newManifests = writeManifests(newFiles)
       commitOrCleanup(next, cur, carried ++ newManifests, newFiles,
         newManifests ++ filteredPages ++ gcFresh)
       next
     }
-  } }
+  }
 
   /**
    * Drop snapshots older than `keepLast` versions, delete data files and
@@ -1452,15 +1336,15 @@ object SnapshotTable {
   }
 
   /** One data file in a snapshot. `lo`/`hi` are the min/max of the table's
-    * stats column in this file (Iceberg's per-file column bounds), present
-    * when the table tracks one; `nulls` is the stats column's NULL count
-    * (Iceberg's null_value_counts — exact when present, None when the
-    * footer didn't record it), which lets ORDER-BY-limit file pruning
-    * reason about where null rows rank even on nullable columns. `bytes`
-    * is the file's on-disk size (drives [[SnapshotTable.compact]]'s
-    * byte-target bin-packing). Companion-level (no outer pointer) so the
-    * distributed footer harvest can return entries straight from executor
-    * tasks. */
+    * LONG stats column in this file (Iceberg's per-file column bounds),
+    * present when the table tracks one and the file holds a non-null
+    * value; `nulls` is the stats column's NULL count (Iceberg's
+    * null_value_counts — exact when present, None when the writer tracked
+    * no LONG stats column), which lets ORDER-BY-limit file pruning reason
+    * about where null rows rank even on nullable columns. `bytes` is the
+    * file's on-disk size (drives [[SnapshotTable.compact]]'s byte-target
+    * bin-packing). Companion-level (no outer pointer) so writer and
+    * decoder tasks can return entries straight from executors. */
   final case class FileEntry(path: String, part: Long, rows: Long, bytes: Long,
       lo: Option[Long] = None, hi: Option[Long] = None, nulls: Option[Long] = None,
       kind: String = "d", seq: Int = 0) {
@@ -1490,86 +1374,82 @@ object SnapshotTable {
   private[graft] case object WriteDynamicOverwrite extends WriteMode
   private[graft] case object WriteTruncate extends WriteMode
 
-  /** Footer opens on the CURRENT THREAD — the commit paths window it
-    * ([[SnapshotTable.lastCommitDriverFooters]]) to pin that the DRIVER
-    * thread opens zero footers; executor task threads (a separate pool
-    * even in local mode) accumulate on their own counters. */
-  private val footerOpens = ThreadLocal.withInitial[java.lang.Long](() => 0L)
-
-  /** Total footer opens across ALL threads of this JVM — test-only
-    * observability (meaningful in local mode, where executors share the
-    * JVM): a spec proves footers WERE opened somewhere while the commit
-    * thread's window stayed at zero, so the driver pin cannot pass
-    * vacuously. */
-  private[graft] val totalFooterOpens = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Bound for maintenance sub-jobs awaited on the commit path: generous
     * (a compaction rewrite job measured in minutes even at large scale),
     * but FINITE — one hung write job must fail the commit with a clear
     * error instead of wedging it forever (round-6 ADVICE). */
   private[index] val MAINTENANCE_TIMEOUT = scala.concurrent.duration.Duration(2, "hours")
 
-  /** Footer-only file entry (row count + stats-column bounds) — STATIC so
-    * the distributed stats job's closure captures no table handle or
-    * session. Numeric parquet statistics are exact (only binary stats
-    * truncate); an all-NULL stats column records no non-null value and
-    * yields no bound — the file then matches every readRange. */
-  private def footerEntry(f: String, statsCol: Option[String],
-      conf: org.apache.hadoop.conf.Configuration): FileEntry = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    footerOpens.set(footerOpens.get() + 1)
-    totalFooterOpens.incrementAndGet()
-    val part = "part=(-?\\d+)".r.findFirstMatchIn(f).map(_.group(1).toLong)
-      .getOrElse(sys.error(s"no partition dir in $f"))
-    val inputFile = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf)
-    val bytes = inputFile.getLength
-    val r = ParquetFileReader.open(inputFile)
-    val (rows, lo, hi, nulls) = try {
-      val blocks = r.getFooter.getBlocks.asScala.toSeq
-      val nRows = blocks.map(_.getRowCount).sum
-      // per-block NULL counts of the stats column (Iceberg's
-      // null_value_counts): exact when every block recorded one, else
-      // unknown — TopN pruning declines on unknown rather than guessing
-      val nullCounts: Option[Long] = statsCol.flatMap { c =>
-        val perBlock = blocks.map(b =>
-          b.getColumns.asScala.find(_.getPath.toDotString == c).map(_.getStatistics) match {
-            case Some(s) if s != null && s.isNumNullsSet => Some(s.getNumNulls)
-            case _ => None
-          })
-        if (perBlock.nonEmpty && perBlock.forall(_.isDefined)) Some(perBlock.flatten.sum)
-        else None
-      }
-      // Per-block bound, CONSERVATIVE: Some(Some(bounds)) = usable numeric
-      // stats; Some(None) = provably ALL-NULL chunk (contributes no value,
-      // safely ignorable — SQL min/max skips nulls the same way); None =
-      // stats absent/non-numeric/NaN-dropped → the file's true extremes
-      // are UNKNOWN, so the file must match every range (recording the
-      // other blocks' bounds could prune away real rows).
-      val perBlock: Seq[Option[Option[(Long, Long)]]] = statsCol match {
-        case None => Seq.empty
-        case Some(c) => blocks.map { b =>
-          b.getColumns.asScala.find(_.getPath.toDotString == c)
-            .map(_.getStatistics) match {
-            case Some(s) if s != null && s.hasNonNullValue =>
-              (s.genericGetMin, s.genericGetMax) match {
-                case (mn: Number, mx: Number) =>
-                  Some(Some((mn.longValue(), mx.longValue())))
-                case _ => None // non-numeric column: no bounds, like the old cast-to-null
-              }
-            case Some(s) if s != null && s.getNumNulls == b.getRowCount =>
-              Some(None) // all-NULL chunk
-            case _ => None // stats missing or partial (e.g. NaN-discarded)
-          }
-        }
-      }
-      val bounds =
-        if (statsCol.isEmpty || perBlock.exists(_.isEmpty)) Seq.empty
-        else perBlock.flatten.flatten
-      if (bounds.isEmpty) (nRows, None, None, nullCounts)
-      else (nRows, Some(bounds.map(_._1).min), Some(bounds.map(_._2).max), nullCounts)
-    } finally r.close()
-    FileEntry(f, part, rows, bytes, lo, hi, nulls)
+  // ---- THE MANIFEST CODEC: the one encoder and decoder of page lines
+  // (FileEntry) and manifest-list entries (ManifestMeta). Decoding is
+  // strict — a line or entry that does not parse throws, naming the file
+  // and the line, instead of being dropped (a dropped entry is a file
+  // every later scan silently loses). ----
+
+  private val entryRe =
+    ("""\{"path":"([^"]+)","part":(-?\d+),"rows":(\d+),"bytes":(\d+)""" +
+     """(?:,"lo":(-?\d+),"hi":(-?\d+))?(?:,"nulls":(\d+))?""" +
+     """(?:,"kind":"(x)")?(?:,"seq":(\d+))?\}""").r
+
+  private val metaRe =
+    ("""\{"path":"([^"]+)","part_lo":(-?\d+),"part_hi":(-?\d+),"files":(\d+),""" +
+     """"rows":(\d+)(?:,"lo":(-?\d+),"hi":(-?\d+))?\}""").r
+
+  /** One manifest-page line. */
+  private[index] def encodeEntry(f: FileEntry): String = {
+    val stats = (f.lo, f.hi) match {
+      case (Some(l), Some(h)) => s""","lo":$l,"hi":$h"""
+      case _ => ""
+    }
+    val nulls = f.nulls.fold("")(n => s""","nulls":$n""")
+    val kind = if (f.isDelete) s""","kind":"x"""" else ""
+    val seq = if (f.seq > 0) s""","seq":${f.seq}""" else ""
+    s"""{"path":"${f.path}","part":${f.part},"rows":${f.rows},"bytes":${f.bytes}$stats$nulls$kind$seq}"""
+  }
+
+  /** One manifest-list entry. */
+  private[index] def encodeMeta(m: ManifestMeta): String = {
+    val stats = (m.lo, m.hi) match {
+      case (Some(l), Some(h)) => s""","lo":$l,"hi":$h"""
+      case _ => ""
+    }
+    s"""{"path":"${m.path}","part_lo":${m.partLo},"part_hi":${m.partHi},""" +
+      s""""files":${m.files},"rows":${m.rows}$stats}"""
+  }
+
+  private def unparsable(what: String, where: String, text: String) =
+    new IllegalStateException(s"corrupt snapshot metadata: unparsable $what at $where: $text")
+
+  /** Decode one manifest page, line at a time. Static and pure, so the
+    * distributed planning arm and [[SnapshotTable.filesMeta]] run it in
+    * executor tasks exactly as the driver does. */
+  private[index] def readPage(path: String): Seq[FileEntry] = {
+    val s = Files.lines(Paths.get(path))
+    try s.iterator().asScala.zipWithIndex.map {
+      case (entryRe(p, part, rows, bytes, lo, hi, nulls, kind, seq), _) =>
+        FileEntry(p, part.toLong, rows.toLong, bytes.toLong,
+          Option(lo).map(_.toLong), Option(hi).map(_.toLong), Option(nulls).map(_.toLong),
+          if (kind == null) "d" else "x", Option(seq).fold(0)(_.toInt))
+      case (line, i) => throw unparsable("manifest entry", s"$path:${i + 1}", line)
+    }.toSeq
+    finally s.close()
+  }
+
+  /** Decode the manifest list of one snapshot file
+    * (`{"version":…,"parent":…,"manifests":[…]}`). */
+  private[index] def readList(snap: Path): Seq[ManifestMeta] = {
+    val json = Files.readString(snap)
+    val key = "\"manifests\":["
+    val at = json.indexOf(key)
+    if (at < 0 || !json.endsWith("]}")) throw unparsable("manifest list", snap.toString, json)
+    val body = json.substring(at + key.length, json.length - 2)
+    if (body.isEmpty) Seq.empty
+    else body.split("(?<=\\}),(?=\\{)").toSeq.map {
+      case metaRe(p, pLo, pHi, files, rows, lo, hi) =>
+        ManifestMeta(p, pLo.toLong, pHi.toLong, files.toInt, rows.toLong,
+          Option(lo).map(_.toLong), Option(hi).map(_.toLong))
+      case e => throw unparsable("manifest-list entry", snap.toString, e)
+    }
   }
 
   private def statsMetaPath(root: String): Path = Paths.get(s"$root/stats.json")
@@ -1591,19 +1471,23 @@ object SnapshotTable {
     }
   }
 
-  /** Persist the stats column at init so every later handle (and the DSv2
-    * source) derives it from table metadata instead of trusting a
-    * free-form option (round-6 ADVICE, medium). */
-  private def writeStatsMeta(root: String, statsCol: Option[String]): Unit = {
+  /** Persist a new table's schema and stats column — shared by [[init]]
+    * and [[createEmpty]]. The schema is stored in READ order (data
+    * columns, then `part` re-appended) so an empty selection unions
+    * cleanly with a non-empty one. The stats column is persisted so every
+    * later handle (and the DSv2 source) derives it from table metadata
+    * instead of trusting a free-form option (round-6 ADVICE, medium). */
+  private def persistSchema(root: String, schema: org.apache.spark.sql.types.StructType,
+      statsCol: Option[String]): Unit = {
+    Files.createDirectories(Paths.get(root))
+    val readOrder = org.apache.spark.sql.types.StructType(
+      schema.fields.filterNot(_.name == "part") ++ schema.fields.filter(_.name == "part"))
+    Files.writeString(Paths.get(s"$root/schema.json"), readOrder.json)
     Files.writeString(statsMetaPath(root),
       s"""{"statscol":${statsCol.fold("null")(c => s""""$c"""")}}""")
     ()
   }
 
-  /** Create an EMPTY snapshot table (version 0): persist the read-order
-    * schema and stats metadata only — the catalog's `CREATE TABLE`. The
-    * first write (SQL INSERT, streaming epoch, or programmatic
-    * [[SnapshotTable.init]]-free commit) becomes version 1. */
   /** TBLPROPERTIES the catalog PERSISTS with the table (read back into
     * every load's option map, under per-operation options): engine knobs
     * that describe the table itself, not one read/write. */
@@ -1627,10 +1511,14 @@ object SnapshotTable {
       .map(m => m.group(1) -> m.group(2)).toMap
   }
 
+  /** Create an EMPTY snapshot table (version 0): persist the read-order
+    * schema and stats metadata only — the catalog's `CREATE TABLE`. The
+    * first write (SQL INSERT, streaming epoch, or programmatic
+    * [[SnapshotTable.init]]-free commit) becomes version 1. */
   def createEmpty(spark: SparkSession, root: String,
       schema: org.apache.spark.sql.types.StructType,
       statsCol: Option[String]): SnapshotTable = {
-    import org.apache.spark.sql.types.{LongType, StructType}
+    import org.apache.spark.sql.types.LongType
     val part = schema.fields.find(_.name == "part").getOrElse(
       throw new IllegalArgumentException(
         "snapshot table schema needs a long `part` partition column"))
@@ -1638,13 +1526,8 @@ object SnapshotTable {
     require(schema.fields.length > 1, "schema needs at least one data column")
     statsCol.foreach(c => require(schema.fieldNames.contains(c) && c != "part",
       s"stats column '$c' must be a data column of the schema"))
-    val schemaFile = Paths.get(s"$root/schema.json")
-    require(!Files.exists(schemaFile), s"table at $root already exists")
-    Files.createDirectories(Paths.get(root))
-    val readOrder = StructType(
-      schema.fields.filterNot(_.name == "part") ++ schema.fields.filter(_.name == "part"))
-    Files.writeString(schemaFile, readOrder.json)
-    writeStatsMeta(root, statsCol)
+    require(!Files.exists(Paths.get(s"$root/schema.json")), s"table at $root already exists")
+    persistSchema(root, schema, statsCol)
     new SnapshotTable(spark, root, statsCol)
   }
 }
@@ -1929,9 +1812,8 @@ object SnapshotQueries {
    * full point index commits at v1, then `DELETE FROM … WHERE part IN
    * (literal list)` drops every partition containing a pid % 7 == 0 row —
    * a METADATA-ONLY commit (manifest surgery; zero data files opened,
-   * read, or written — [[SnapshotTable.deleteParts]]; asserted here via
-   * the footer counter so the bench path keeps the scale property honest,
-   * and again in the spec). The oracle recomputes the survivors as "rows
+   * read, or written — [[SnapshotTable.deleteParts]]; pinned in the
+   * spec). The oracle recomputes the survivors as "rows
    * whose partition contains no pid % 7 == 0 row" with the same bit
    * arithmetic — a delete that drops too little, too much, or resurrects
    * time-travel files goes red.
@@ -1954,10 +1836,7 @@ object SnapshotQueries {
     // SupportsDelete.canDeleteWhere accepts as a metadata delete
     val parts = base.filter(col("pid") % 7 === 0)
       .select("part").distinct().collect().map(_.getLong(0)).sorted
-    val before = SnapshotTable.totalFooterOpens.get()
     spark.sql(s"DELETE FROM snap_sqldel WHERE part IN (${parts.mkString(",")})")
-    require(SnapshotTable.totalFooterOpens.get() == before,
-      "metadata delete must not open any parquet footer")
     t.read().select(col("pid"), col("cell"))
   }
 

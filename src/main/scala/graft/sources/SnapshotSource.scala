@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-import graft.index.SnapshotTable
+import graft.index.{SnapCommitMessage, SnapDataWriter, SnapshotTable}
 
 /**
  * DataSourceV2 READ path for [[graft.index.SnapshotTable]] (round-5 verdict
@@ -96,14 +96,11 @@ object SnapshotSource {
       * [[SupportsDelete.canDeleteWhere]] first. */
     override def newRowLevelOperationBuilder(
         info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
-        : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
-      val mor = Option(props.get("delete.mode")).exists(_.equalsIgnoreCase("merge-on-read"))
-      val key = Option(props.get("morkey")).orElse(tableFor(props).morKey)
-      (mor, key) match {
-        case (true, Some(k)) => () => new SnapDeltaOperation(info.command(), schema, props, k)
-        case _ => () => new SnapRowLevelOperation(info.command(), schema, props)
+        : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
+      (if (morMode) morKeyName else None) match {
+        case Some(k) => () => new SnapDeltaOperation(info.command(), schema, props, k)
+        case None => () => new SnapRowLevelOperation(info.command(), schema, props)
       }
-    }
     override def name(): String = s"graft-snapshot(${props.get("root")})"
     /** Under MOR mode the row-identity columns report NON-NULLABLE (a
       * Spark requirement for delta row-level operations — Iceberg's
@@ -111,17 +108,18 @@ object SnapshotSource {
       * by the write contract already; a MOR table's key must be too (a
       * null key has no equality-delete identity; the delta writer
       * enforces it). Plain tables keep their declared nullability. */
-    override def schema(): StructType = {
-      val mor = Option(props.get("delete.mode")).exists(_.equalsIgnoreCase("merge-on-read"))
-      // same resolution as newRowLevelOperationBuilder: a key known only
-      // from mor.json must report non-nullable too (round-7 ADVICE — the
-      // props-only lookup left it nullable, inconsistent with the delta
-      // operation's row-identity requirement)
-      val key = Option(props.get("morkey")).orElse(tableFor(props).morKey)
-      if (!mor) schema
-      else StructType(schema.fields.map(f =>
-        if (f.name == "part" || key.contains(f.name)) f.copy(nullable = false) else f))
-    }
+    override def schema(): StructType =
+      if (!morMode) schema
+      else {
+        // same resolution as newRowLevelOperationBuilder: a key known only
+        // from mor.json must report non-nullable too (round-7 ADVICE — the
+        // props-only lookup left it nullable, inconsistent with the delta
+        // operation's row-identity requirement). Non-MOR tables never
+        // build a table handle here: schema() runs on every plan.
+        val key = morKeyName
+        StructType(schema.fields.map(f =>
+          if (f.name == "part" || key.contains(f.name)) f.copy(nullable = false) else f))
+      }
     // identity partitioning on `part` (the table's physical layout): with
     // it declared, INSERT OVERWRITE under partitionOverwriteMode=dynamic
     // plans OverwritePartitionsDynamic instead of a whole-table truncate
@@ -738,10 +736,13 @@ object SnapshotSource {
    * REQUIRES a clustered distribution on `part`, so each partition's rows
    * land in one task and one file — without it every task would fan a
    * file into every partition dir (the measured buckets×tasks tiny-file
-   * cliff). Writers stream rows through Spark's own `ParquetWriteSupport`
-   * and track (rows, stats-column min/max) INLINE, so the commit needs no
-   * footer reads anywhere — driver or executor. CREATE_NEW still decides
-   * a commit race; the loser's files are deleted and the racer must retry.
+   * cliff) — and orders each task by `part`, so a task holding many
+   * partitions never exceeds the writer's open-file cap. The tasks run
+   * the table's one data-file writer, [[graft.index.SnapDataWriter]] —
+   * the same one the programmatic commits use — which records each file's
+   * rows, bytes and stats bounds while writing, so the commit reads no
+   * footer. CREATE_NEW still decides a commit race; the loser's files are
+   * deleted and the racer must retry.
    */
   private final class SnapWriteBuilder(info: LogicalWriteInfo,
       props: java.util.Map[String, String])
@@ -762,11 +763,16 @@ object SnapshotSource {
     // partition per write (compact() re-slices fat ones later)
     override def requiredDistribution(): Distribution =
       Distributions.clustered(Array(Expressions.column("part")))
-    override def requiredOrdering(): Array[SortOrder] = Array.empty
+    override def requiredOrdering(): Array[SortOrder] = partOrder
     override def toBatch: BatchWrite = new SnapBatchWrite(schema, props, mode)
     override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
       new SnapStreamingWrite(schema, props, mode, queryId)
   }
+
+  /** Each write task's row order: partitions arrive one after another. */
+  private def partOrder: Array[SortOrder] =
+    Array(Expressions.sort(Expressions.column("part"),
+      org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
 
   /** The shared writer-factory setup (physical `_part` schema, stats/part
     * column indices, file-roll target, shipped conf) — identical for the
@@ -775,19 +781,14 @@ object SnapshotSource {
       props: java.util.Map[String, String]): (Int, Int, Long,
       org.apache.spark.SerializableWritable[org.apache.hadoop.conf.Configuration]) = {
     val session = SparkSession.active
-    // physical file schema: `part` (always last in table read order)
-    // persists as the `_part` data column — same positions, same values,
-    // matching the programmatic writes' layout exactly
-    val physical = StructType(schema.fields.map(f =>
-      if (f.name == "part") f.copy(name = "_part") else f))
     val partIdx = schema.fieldIndex("part")
     val statsIdx = table.statsColumn.map(schema.fieldIndex).getOrElse(-1)
     val statsIsLong = statsIdx >= 0 && schema.fields(statsIdx).dataType == LongType
     val targetBytes = Option(props.get("targetfilebytes")).map(_.toLong)
-      .getOrElse(SnapshotSource.DEFAULT_TARGET_FILE_BYTES)
+      .getOrElse(SnapDataWriter.DEFAULT_TARGET_FILE_BYTES)
     require(targetBytes > 0, s"targetfilebytes must be positive, got $targetBytes")
     (partIdx, if (statsIsLong) statsIdx else -1, targetBytes,
-      writerConf(session, physical))
+      SnapDataWriter.writerConf(session, SnapDataWriter.physical(schema)))
   }
 
   /**
@@ -892,7 +893,7 @@ object SnapshotSource {
         override def description(): String = s"graft-snapshot COW $cmd write"
         override def requiredDistribution(): Distribution =
           Distributions.clustered(Array(Expressions.column("part")))
-        override def requiredOrdering(): Array[SortOrder] = Array.empty
+        override def requiredOrdering(): Array[SortOrder] = partOrder
         override def toBatch: BatchWrite =
           new SnapReplaceGroupsWrite(info.schema(), props, () => configured)
       }
@@ -961,8 +962,7 @@ object SnapshotSource {
       val delSchema = StructType(Seq(
         StructField(key, LongType, nullable = false),
         StructField("part", LongType, nullable = false)))
-      val delConf = writerConf(session, StructType(delSchema.fields.map(f =>
-        if (f.name == "part") f.copy(name = "_part") else f)))
+      val delConf = SnapDataWriter.writerConf(session, SnapDataWriter.physical(delSchema))
       // a pure DELETE's delta plan carries NO data columns (empty row
       // schema) — the insert side is never exercised, so wire it to the
       // delete writer's shape as an inert placeholder
@@ -970,7 +970,7 @@ object SnapshotSource {
         val (partIdx, statsIdx, targetBytes, conf) = writerSetup(schema, table, props)
         SnapDeltaWriterFactory(dir, partIdx, statsIdx, targetBytes, conf, delConf)
       } else
-        SnapDeltaWriterFactory(dir, 1, -1, SnapshotSource.DEFAULT_TARGET_FILE_BYTES,
+        SnapDeltaWriterFactory(dir, 1, -1, SnapDataWriter.DEFAULT_TARGET_FILE_BYTES,
           delConf, delConf)
     }
 
@@ -1114,39 +1114,6 @@ object SnapshotSource {
     }
   }
 
-  /** Per-task hadoop conf for the parquet writers: the session conf plus
-    * the physical row schema and the SQLConf entries
-    * `ParquetWriteSupport.init` asserts on. */
-  private def writerConf(session: SparkSession, physical: StructType)
-      : org.apache.spark.SerializableWritable[org.apache.hadoop.conf.Configuration] = {
-    import org.apache.spark.sql.internal.SQLConf
-    val conf = session.sessionState.newHadoopConf()
-    org.apache.spark.sql.execution.datasources.parquet
-      .ParquetWriteSupport.setSchema(physical, conf)
-    val sql = session.sessionState.conf
-    conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key,
-      sql.getConf(SQLConf.PARQUET_WRITE_LEGACY_FORMAT).toString)
-    conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
-      sql.getConf(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE).toString)
-    conf.set(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key,
-      sql.getConf(SQLConf.PARQUET_REBASE_MODE_IN_WRITE).toString)
-    conf.set(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE.key,
-      sql.getConf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE).toString)
-    conf.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key,
-      sql.getConf(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED).toString)
-    conf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key,
-      sql.getConf(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE).toString)
-    new org.apache.spark.SerializableWritable(conf)
-  }
-
-  /** Target size at which a writer ROLLS to a new file within a partition
-    * (Iceberg's write.target-file-size-bytes spirit, 512 MB): a hot
-    * partition's SQL ingest lands as several target-sized files instead of
-    * one giant one — bounded memory per reader task later, no compaction
-    * needed just to fix ingest layout. Override per write with the
-    * `targetfilebytes` option. */
-  final val DEFAULT_TARGET_FILE_BYTES: Long = 512L * 1024 * 1024
-
   /** True iff any covering delete file can still retire a row of some
     * covering data file ([[SnapshotTable.deleteApplies]]' part + sequence
     * rule). The read-side gates (metadata aggregates, limit/TopN file
@@ -1167,94 +1134,6 @@ object SnapshotSource {
     override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
       new SnapDataWriter(dir, partIdx, statsIdx, targetBytes,
         new org.apache.hadoop.conf.Configuration(conf.value), partitionId, taskId)
-  }
-
-  private final case class SnapCommitMessage(entries: Seq[SnapshotTable.FileEntry])
-      extends WriterCommitMessage
-
-  /** One parquet file per `part` value this task sees (the required
-    * clustering makes that one part per task in practice), ROLLED at
-    * [[DEFAULT_TARGET_FILE_BYTES]] so a hot partition never produces one
-    * giant file; rows stream through Spark's ParquetWriteSupport, stats
-    * accumulate inline per file. */
-  private final class SnapDataWriter(dir: String, partIdx: Int, statsIdx: Int,
-      targetBytes: Long, conf: org.apache.hadoop.conf.Configuration,
-      partitionId: Int, taskId: Long)
-      extends DataWriter[InternalRow] {
-
-    private final class PartFile(val part: Long) {
-      val path = s"$dir/part=$part/part-$partitionId-$taskId-" +
-        s"${java.util.UUID.randomUUID().toString.take(8)}.parquet"
-      val writer = new RowWriterBuilder(new org.apache.hadoop.fs.Path(path))
-        .withConf(conf)
-        .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-        .build()
-      var rows = 0L
-      var lo = Long.MaxValue
-      var hi = Long.MinValue
-      var bounded = false
-      var nulls = 0L
-    }
-    private val open = scala.collection.mutable.Map.empty[Long, PartFile]
-    private val done = scala.collection.mutable.ListBuffer.empty[SnapshotTable.FileEntry]
-
-    private def closeEntry(f: PartFile): SnapshotTable.FileEntry = {
-      f.writer.close()
-      val hp = new org.apache.hadoop.fs.Path(f.path)
-      val bytes = hp.getFileSystem(conf).getFileStatus(hp).getLen
-      SnapshotTable.FileEntry(f.path, f.part, f.rows, bytes,
-        if (f.bounded) Some(f.lo) else None, if (f.bounded) Some(f.hi) else None,
-        if (statsIdx >= 0) Some(f.nulls) else None)
-    }
-
-    override def write(row: InternalRow): Unit = {
-      require(!row.isNullAt(partIdx), "snapshot write: `part` must not be null")
-      val p = row.getLong(partIdx)
-      val f = open.getOrElseUpdate(p, new PartFile(p))
-      f.writer.write(row)
-      f.rows += 1
-      if (statsIdx >= 0) {
-        if (row.isNullAt(statsIdx)) f.nulls += 1
-        else {
-          val v = row.getLong(statsIdx)
-          f.lo = math.min(f.lo, v); f.hi = math.max(f.hi, v); f.bounded = true
-        }
-      }
-      // roll at the byte target; getDataSize (written + buffered) is
-      // checked every 1024 rows — it walks the column writers, so a
-      // per-row check would tax the hot loop
-      if (f.rows % 1024 == 0 && f.writer.getDataSize >= targetBytes) {
-        done += closeEntry(f)
-        open.remove(p)
-        ()
-      }
-    }
-
-    override def commit(): WriterCommitMessage = {
-      done ++= open.values.toSeq.sortBy(_.path).map(closeEntry)
-      open.clear()
-      SnapCommitMessage(done.toList)
-    }
-
-    override def abort(): Unit = {
-      (open.values.map(f => { scala.util.Try(f.writer.close()); f.path }) ++ done.map(_.path))
-        .foreach { p =>
-          java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(p))
-          ()
-        }
-    }
-
-    override def close(): Unit = ()
-  }
-
-  /** Public ParquetWriter builder over Spark's InternalRow write support
-    * (schema + codec settings ride the conf, set by [[writerConf]]). */
-  private final class RowWriterBuilder(path: org.apache.hadoop.fs.Path)
-      extends org.apache.parquet.hadoop.ParquetWriter.Builder[InternalRow, RowWriterBuilder](path) {
-    override def getWriteSupport(conf: org.apache.hadoop.conf.Configuration)
-        : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] =
-      new org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport()
-    override def self(): RowWriterBuilder = this
   }
 
   // ------------------------------------------------------- DSv2 READ path

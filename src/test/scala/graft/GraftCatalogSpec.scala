@@ -367,7 +367,6 @@ class GraftCatalogSpec extends SparkSpec {
       .head().getLong(0) === 20, "undone versions remain time-travelable")
     // metadata-only: the restored version REFERENCES v1's manifests
     assert(t.manifestList(4).map(_.path).toSet === v1Manifests)
-    assert(t.lastCommitDriverFooters === 0, "restore opens no footers")
     // expire keeps the restored content's files live (they are v1's files)
     spark.sql("CALL cat.system.expire(tbl => 'geo.rst', keep_last => 1, grace_ms => 0)")
     assert(spark.sql("SELECT count(*) AS n FROM cat.geo.rst").head().getLong(0) === 10)

@@ -268,7 +268,7 @@ class SnapshotTableSpec extends SparkSpec {
     val based = t.currentVersion
     // …meanwhile a racing writer advances the table to v2
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/snap-2.json"),
-      """{"version":2,"parent":1,"files":[],"part_rows":{}}""")
+      """{"version":2,"parent":1,"manifests":[]}""")
     val before = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$root/snap-2.json"))
     intercept[IllegalStateException] {
       t.upsert(Seq((1L, 1L, 9L)).toDF("id", "part", "ver"), Seq("id"), basedOn = Some(based))
@@ -510,27 +510,6 @@ class SnapshotTableSpec extends SparkSpec {
       .head().getLong(0) === 11L)
   }
 
-  test("commit-time stats harvest is DISTRIBUTED: zero parquet footers opened on the driver") {
-    val root = java.nio.file.Files.createTempDirectory("snapfooter").toString
-    val t = new SnapshotTable(spark, root, statsCol = Some("id"))
-    val before = SnapshotTable.totalFooterOpens.get()
-    t.init((0L until 1000L).map(i => (i, i / 125, 1L)).toDF("id", "part", "ver").repartition(4))
-    // footers WERE harvested (somewhere in the JVM) — the driver pin below
-    // cannot pass vacuously
-    assert(SnapshotTable.totalFooterOpens.get() > before,
-      "the commit must have opened parquet footers for its stats")
-    assert(t.lastCommitDriverFooters === 0L,
-      s"init opened ${t.lastCommitDriverFooters} footers on the DRIVER thread — " +
-        "stats harvest must run as a Spark job")
-    assert(t.snapshot(1).forall(f => f.lo.isDefined && f.hi.isDefined),
-      "the distributed harvest must still record per-file bounds")
-    t.upsert(Seq((130L, 1L, 2L)).toDF("id", "part", "ver"), Seq("id"))
-    assert(t.lastCommitDriverFooters === 0L, "upsert's stats harvest must be distributed")
-    t.compact(maxFiles = 1)
-    assert(t.lastCommitDriverFooters === 0L, "compact's stats harvest must be distributed")
-    assert(t.read().count() === 1000L)
-  }
-
   test("the stats column is TABLE METADATA: persisted at init, derived by readers, mismatches rejected") {
     val root = java.nio.file.Files.createTempDirectory("snapstatsmeta").toString
     val t = new SnapshotTable(spark, root, statsCol = Some("id"))
@@ -730,15 +709,9 @@ class SnapshotTableSpec extends SparkSpec {
       .createOrReplaceTempView("snap_w")
     (0L until 1000L).filter(_ % 3 == 0).map(i => (i, i / 125, 2L))
       .toDF("id", "part", "ver").createOrReplaceTempView("snap_delta")
-    val footersBefore = SnapshotTable.totalFooterOpens.get()
     // table read order is (id, ver, part) — positional INSERT
     spark.sql("INSERT INTO snap_w SELECT id, ver, part FROM snap_delta")
     assert(t.currentVersion === 2)
-    // the SQL write's stats came from the writers INLINE: zero footer
-    // opens in the whole JVM, driver or executor
-    assert(SnapshotTable.totalFooterOpens.get() === footersBefore,
-      "a DSv2 write commit must not open any parquet footer")
-    assert(t.lastCommitDriverFooters === 0L)
     val got = t.read().select("id", "ver").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === (0L until 1000L).map(i => (i, if (i % 3 == 0) 2L else 1L)).toSet,
@@ -1009,7 +982,6 @@ class SnapshotTableSpec extends SparkSpec {
     // O(delta): every data file carried BY REFERENCE, delete files added
     assert(t.snapshot(2).filterNot(_.isDelete).map(_.path).toSet === v1files)
     assert(t.snapshot(2).count(_.isDelete) > 0)
-    assert(t.lastCommitDriverFooters === 0, "MOR delete commit opens no driver footers")
     // reads apply the deletes; pruned reads load only their partitions' keys
     assert(t.read().count() === 900L)
     assert(t.read().filter($"id" % 10 === 0).count() === 0L)
@@ -1052,7 +1024,6 @@ class SnapshotTableSpec extends SparkSpec {
     assert(t.currentVersion === 2)
     assert(v1files.subsetOf(t.snapshot(2).map(_.path).toSet),
       "MOR upsert must carry every base file by reference")
-    assert(t.lastCommitDriverFooters === 0)
     val r2 = t.read()
     assert(r2.count() === 1001L)
     assert(r2.filter($"id" === 100L).select("v").head.getLong(0) === 9999L)
@@ -1156,7 +1127,6 @@ class SnapshotTableSpec extends SparkSpec {
     // partition-aligned DELETE still takes the metadata path under MOR mode
     spark.sql("DELETE FROM snap_morsql WHERE part = 3")
     assert(t.currentVersion === 4)
-    assert(t.lastCommitDriverFooters === 0)
     // part 3 held 250 rows of which ids 3 and 7 were already MOR-deleted
     assert(spark.table("snap_morsql").count() === 995L - 248L)
     // compact folds the scoped deletes; reads stay columnar-parity
@@ -1241,9 +1211,11 @@ class SnapshotTableSpec extends SparkSpec {
     assert(!spark.sql("SELECT COUNT(*) FROM snap_inert").queryExecution.executedPlan
       .toString.contains("METADATA aggregate"), "applicable delete must decline the metadata agg")
     assert(spark.sql("SELECT COUNT(*) FROM snap_inert").head.getLong(0) === 998L)
-    // compact rewrites every fragmented partition at a HIGHER seq — the
-    // global delete is folded into the rewrite and becomes inert
-    assert(t.compact(maxFiles = 1) === 3)
+    // a COW upsert touching every partition rewrites them at a HIGHER seq —
+    // the global delete is folded into the rewrite and becomes inert (a
+    // compaction rewriting every partition would GC it in the same commit)
+    assert(t.upsert(Seq(0L, 1L, 2L, 7L).map(i => (i, i % 4, i * 2)).toDF("id", "part", "v"),
+      Seq("id")) === 3)
     assert(spark.table("snap_inert").count() === 998L)
     assert(t.snapshot(3).count(_.isDelete) >= 1, "inert global delete file(s) still referenced")
     // inert ⇒ the gates re-open (presence-based gating kept them off forever)
@@ -1253,8 +1225,8 @@ class SnapshotTableSpec extends SparkSpec {
     view.limit(5).collect()
     assert(graft.sources.SnapshotSource.ScanProbe.lastPlannedSlices === 1,
       "inert delete must re-enable LIMIT file pruning")
-    // fragment one partition again; the NEXT compact's conservative parent
-    // minimum-seq bound (now >= the delete's seq) GCs the inert file
+    // fragment one partition; the compact's minimum seq over the surviving
+    // data files (now >= the delete's seq) GCs the inert file
     t.upsert((0L until 50L).map(i => (i * 4, 0L, i)).toDF("id", "part", "v")
       .repartition(2), Seq("id"))
     assert(t.compact(maxFiles = 1) === 5)
@@ -1474,11 +1446,8 @@ class SnapshotTableSpec extends SparkSpec {
     t.init((0L until 1000L).map(i => (i, i % 8, 1L)).toDF("id", "part", "ver").repartition(4))
     spark.read.format("graft.sources.SnapshotSource").option("root", root).load()
       .createOrReplaceTempView("snap_del")
-    val footersBefore = SnapshotTable.totalFooterOpens.get()
     spark.sql("DELETE FROM snap_del WHERE part IN (2, 5)")
     assert(t.currentVersion === 2)
-    assert(SnapshotTable.totalFooterOpens.get() === footersBefore,
-      "a metadata delete must not open any parquet footer")
     val got = t.read().select("id").collect().map(_.getLong(0)).toSet
     assert(got === (0L until 1000L).filter(i => i % 8 != 2 && i % 8 != 5).toSet)
     // untouched partitions carry the SAME files; dropped files SURVIVE on
@@ -1732,5 +1701,126 @@ class SnapshotTableSpec extends SparkSpec {
     // the current snapshot remains fully readable
     assert(t.read().count() === 1000L)
     assert(t.currentVersion === 2)
+  }
+
+  /** Reference stats of one data file, read back from its parquet footer:
+    * (rows, bytes, lo, hi, nulls), the last three for stats column `c`
+    * when the file carries it as a LONG column, else None. */
+  private def footerStats(path: String, c: Option[String])
+      : (Long, Long, Option[Long], Option[Long], Option[Long]) = {
+    import scala.jdk.CollectionConverters._
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(path), spark.sparkContext.hadoopConfiguration)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try {
+      val blocks = r.getFooter.getBlocks.asScala.toSeq
+      val longCol = c.filter(n => r.getFooter.getFileMetaData.getSchema.getFields.asScala.exists(f =>
+        f.getName == n && f.isPrimitive && f.asPrimitiveType.getPrimitiveTypeName ==
+          org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64))
+      val stats = longCol.toSeq.flatMap(n => blocks.map(b =>
+        b.getColumns.asScala.find(_.getPath.toDotString == n).get.getStatistics))
+      val valued = stats.filter(_.hasNonNullValue)
+      def bound(f: org.apache.parquet.column.statistics.Statistics[_] => Any, pick: Seq[Long] => Long) =
+        if (valued.isEmpty) None
+        else Some(pick(valued.map(st => f(st).asInstanceOf[java.lang.Long].longValue)))
+      (blocks.map(_.getRowCount).sum, in.getLength,
+        bound(_.genericGetMin, _.min), bound(_.genericGetMax, _.max),
+        longCol.map(_ => stats.map(_.getNumNulls).sum))
+    } finally r.close()
+  }
+
+  test("manifest stats equal each data file's parquet footer on every write path") {
+    def parity(t: SnapshotTable, c: Option[String], op: String): Unit = {
+      val entries = t.snapshot(t.currentVersion)
+      assert(entries.nonEmpty, op)
+      entries.foreach { e =>
+        assert((e.rows, e.bytes, e.lo, e.hi, e.nulls) === footerStats(e.path, c),
+          s"$op: manifest entry of ${e.path} differs from its footer")
+      }
+    }
+    val plain = new SnapshotTable(spark,
+      java.nio.file.Files.createTempDirectory("snapparity0").toString)
+    plain.init(baseDf)
+    parity(plain, None, "init without a stats column")
+    // stats column `ts` with NULLs: bounds skip them, the null count is exact
+    val t = new SnapshotTable(spark,
+      java.nio.file.Files.createTempDirectory("snapparity1").toString, statsCol = Some("ts"))
+    t.init((0L until 1000L).map(i => (i, if (i % 7 == 0) None else Some(i * 3), i % 8))
+      .toDF("id", "ts", "part").repartition(4))
+    parity(t, Some("ts"), "init")
+    // partition 9 arrives all-NULL on `ts`: its file records no bounds
+    t.upsert(Seq((5L, Some(1L), 5L), (3000L, None, 9L), (3001L, None, 9L))
+      .toDF("id", "ts", "part"), Seq("id"))
+    parity(t, Some("ts"), "upsert")
+    assert(t.snapshot(t.currentVersion).filter(_.part == 9L).forall(_.lo.isEmpty))
+    t.delete(Seq((6L, 6L)).toDF("id", "part"), Seq("id"))
+    parity(t, Some("ts"), "delete")
+    t.upsertMor(Seq((9L, Some(77L), 1L)).toDF("id", "ts", "part"), "id")
+    parity(t, Some("ts"), "upsertMor")
+    t.deleteKeysMor(Seq(10L, 11L).toDF("id"), "id")
+    parity(t, Some("ts"), "deleteKeysMor")
+    val beforeCompact = t.currentVersion
+    assert(t.compact() === beforeCompact + 1)
+    parity(t, Some("ts"), "compact")
+    assert(t.read().count() === 1000L + 2 - 1 - 2)
+  }
+
+  test("relative, double-slash, trailing-slash and symlinked roots read and expire alike") {
+    val base = java.nio.file.Files.createTempDirectory("snappathform")
+    val link = java.nio.file.Files.createSymbolicLink(base.resolve("link"),
+      java.nio.file.Files.createDirectory(base.resolve("real")))
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath
+    val forms: Seq[(String, String => String)] = Seq(
+      "relative" -> (n => cwd.relativize(base.resolve(n)).toString),
+      "double-slash" -> (n => s"$base//$n"),
+      "trailing-slash" -> (n => s"$base/$n/"),
+      "symlinked" -> (n => s"$link/$n"))
+    (0L until 10L).map(i => (5000L + i, i % 16, 2L)).toDF("id", "part", "ver")
+      .createOrReplaceTempView("snap_pathform_delta")
+    val was = SnapshotTable.distributedPlanThreshold
+    try for ((form, rootOf) <- forms; distributed <- Seq(false, true)) {
+      val arm = if (distributed) "distributed" else "driver"
+      SnapshotTable.distributedPlanThreshold = if (distributed) 1 else was
+      val root = rootOf(s"$form-$arm")
+      val t = new SnapshotTable(spark, root)
+      t.init((0L until 2000L).map(i => (i, i % 16, 1L)).toDF("id", "part", "ver"))
+      assert(t.read().count() === 2000L, s"$form root, $arm planning")
+      spark.read.format("graft.sources.SnapshotSource").option("root", root).load()
+        .createOrReplaceTempView("snap_pathform")
+      spark.sql("INSERT INTO snap_pathform SELECT id, ver, part FROM snap_pathform_delta")
+      t.expire(keepLast = 1, orphanGraceMs = 0L)
+      t.pruneFiles(None, None).foreach(f => assert(
+        java.nio.file.Files.exists(java.nio.file.Paths.get(f.path)),
+        s"$form root, $arm planning: expire deleted live file ${f.path}"))
+      assert(t.read().count() === 2010L, s"$form root, $arm planning, after expire")
+    } finally SnapshotTable.distributedPlanThreshold = was
+    // a root the manifest codec cannot spell is rejected up front
+    intercept[IllegalArgumentException](new SnapshotTable(spark, base.resolve("quo\"te").toString))
+  }
+
+  test("a non-MOR table with an unreadable mor.json still resolves its schema and reads") {
+    val (root, t) = freshTable()
+    t.init(baseDf)
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$root/mor.json"))
+    val df = spark.read.format("graft.sources.SnapshotSource").option("root", root).load()
+    assert(df.schema.fieldNames.toSeq === Seq("id", "ver", "part"))
+    df.createOrReplaceTempView("snap_nomor")
+    assert(spark.sql("SELECT id FROM snap_nomor WHERE part = 3").collect().map(_.getLong(0)).toSet ===
+      (0L until 1000L).filter(_ % 8 == 3).toSet)
+  }
+
+  test("a compaction that rewrites every partition drops the global delete it folds") {
+    val root = java.nio.file.Files.createTempDirectory("snapgcexact").toString
+    // stats-column table: the 4-task fan-out layout fragments every partition
+    val t = new SnapshotTable(spark, root, statsCol = Some("id"))
+    t.init((0L until 1000L).map(i => (i, i % 4, 1L)).toDF("id", "part", "ver").repartition(4))
+    assert((0L until 4L).forall(p => t.snapshot(1).count(_.part == p) > 1),
+      "fixture: every partition fragmented")
+    t.deleteKeysMor(Seq(3L, 5L).toDF("id"), "id") // GLOBAL delete, seq 2
+    assert(t.snapshot(2).count(_.isDelete) > 0)
+    assert(t.compact() === 3)
+    assert(t.snapshot(3).forall(f => !f.isDelete && f.seq == 3),
+      "every partition rewritten at seq 3 leaves the folded global delete inert: GC it now")
+    assert(t.read().count() === 998L)
   }
 }
