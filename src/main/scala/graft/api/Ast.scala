@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.cell.{CellFunctions, CellIndex}
 import graft.gen.GeoWorld
 import graft.geom.GeoCols
-import graft.query.GeoQueries
+import graft.query.{GeoQueries, SpatialJoin}
 
 /**
  * Typed query AST + translator — the reference's client-shared query model
@@ -143,31 +143,20 @@ object AstTranslator {
 
       case AreasFromArea(level, parent) =>
         translate(spark, sfDir, parent).map { parents =>
-          val p = parents.select(col("area_id").as("parent_id"), col("wkb").as("parent_wkb"),
-            explode(GeoWorld.coverCells(col("lon0"), col("lat0"), col("lon1"), col("lat1"), RES_COARSE)).as("cell"))
           // child joins by its PRINCIPAL cell (T13) against the parent's
           // cover: each candidate pair appears exactly once, so the per-hop
-          // dedup shuffle of the cover×cover variant disappears (see
-          // GeoQueries.containmentJoin for the completeness argument)
-          GeoWorld.areas(spark, sfDir).filter(col("level") === level)
-            .withColumn("cell", CellFunctions.zcell(
-              (col("lon0") + col("lon1")) / 2.0, (col("lat0") + col("lat1")) / 2.0, lit(RES_COARSE)))
-            .join(broadcast(p), "cell")
-            .filter(GeoCols.geoWithin(col("wkb"), col("parent_wkb")))
+          // dedup shuffle of the cover×cover variant disappears
+          val p = parents.select(col("area_id").as("parent_id"),
+            col("lon0"), col("lat0"), col("lon1"), col("lat1"), col("wkb"))
+          SpatialJoin.within(GeoWorld.areas(spark, sfDir).filter(col("level") === level), p, RES_COARSE)
             .select(col("area_id"), col("area_name"), col("level"),
               col("lon0"), col("lat0"), col("lon1"), col("lat1"), col("wkb"), col("parent_id"))
         }
 
       case PoisFromArea(tagK, tagV, area) =>
         translate(spark, sfDir, area).map { areas =>
-          val a = areas.select(col("area_id"), col("wkb"),
-            explode(GeoWorld.coverCells(col("lon0"), col("lat0"), col("lon1"), col("lat1"), RES_MID)).as("cell"))
-          GeoWorld.points(spark, sfDir)
-            .filter(col("tag_k") === tagK && col("tag_v") === tagV)
-            .withColumn("cell", CellFunctions.zcell(col("lon"), col("lat"), lit(RES_MID)))
-            .join(broadcast(a), "cell")
-            .filter(GeoCols.geoContainsPoint(col("wkb"), col("lon"), col("lat")))
-            .select(col("area_id"), col("pid"), col("name"))
+          val pts = GeoWorld.points(spark, sfDir).filter(col("tag_k") === tagK && col("tag_v") === tagV)
+          SpatialJoin.pip(pts, areas, RES_MID).select(col("area_id"), col("pid"), col("name"))
         }
 
       case PoisFromCoordinates(tagK, lon, lat) =>
@@ -228,15 +217,7 @@ object AstTranslator {
           // lonMin > lonMax ⇒ the cover is rectCover's two-hemisphere
           // union and the refine is the WRAPPED predicate (never 0 rows,
           // the clamp-only blind spot the reference inherits)
-          import spark.implicits._
-          val cover = CellIndex.rectCover(lo0, la0, lo1, la1, RES_MID).toSeq.toDF("cell")
-          val lonPred =
-            if (lo0 <= lo1) col("lon") > lo0 && col("lon") < lo1
-            else col("lon") > lo0 || col("lon") < lo1
-          Right(GeoWorld.points(spark, sfDir)
-            .withColumn("cell", CellFunctions.zcell(col("lon"), col("lat"), lit(RES_MID)))
-            .join(broadcast(cover), "cell")
-            .filter(lonPred && col("lat") > la0 && col("lat") < la1)
+          Right(SpatialJoin.bbox(GeoWorld.points(spark, sfDir), "lon", lo0, la0, lo1, la1, RES_MID)
             .select(col("pid"), col("lon"), col("lat")))
         }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.cell.{CellFunctions, CellIndex}
 import graft.gen.GeoWorld
-import graft.geom.GeoCols
+import graft.query.SpatialJoin
 
 /**
  * The headline benchmark job — BASELINE.json's metric: "spatial-join +
@@ -34,13 +34,8 @@ object Headline {
 
   def job(spark: SparkSession, sfDir: String, z: Int = 7, factor: Int = 1): DataFrame = {
     GeoWorld.registerUdfs(spark)
-    val pts = scaledPoints(spark, sfDir, factor)
-      .withColumn("cell", CellFunctions.zcell(col("lon"), col("lat"), lit(CellIndex.RES_COARSE)))
     val areas = GeoWorld.areas(spark, sfDir).filter(col("level") === 4)
-      .withColumn("cell", explode(GeoWorld.coverCells(col("lon0"), col("lat0"), col("lon1"), col("lat1"), CellIndex.RES_COARSE)))
-      .select("cell", "area_id", "wkb")
-    pts.join(broadcast(areas), "cell")
-      .filter(GeoCols.geoContainsPoint(col("wkb"), col("lon"), col("lat")))
+    SpatialJoin.pip(scaledPoints(spark, sfDir, factor), areas, CellIndex.RES_COARSE)
       .select(
         col("area_id"),
         graft.cell.TileCols.tileX(col("lon"), lit(z)).as("tx"),

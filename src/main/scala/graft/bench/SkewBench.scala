@@ -3,9 +3,7 @@ package graft.bench
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
-import graft.cell.{CellFunctions, CellIndex}
 import graft.gen.GeoWorld
-import graft.geom.GeoCols
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 
@@ -63,21 +61,9 @@ object SkewBench {
 
   private def spread(spark: SparkSession, sfDir: String, salt: Int, aqe: Boolean = false): (Double, Double, Double) = {
     GeoWorld.registerUdfs(spark)
+    // salt = 1 joins on (cell, 0): the plain skewed shuffle
     measuredSpread(spark, aqe) {
-      val pts = GeoWorld.points(spark, sfDir)
-        .withColumn("cell", CellFunctions.zcell(col("lon"), col("lat"), lit(CellIndex.RES_COARSE)))
-      val areas = GeoWorld.areas(spark, sfDir).filter(col("level") === 4)
-        .withColumn("cell", explode(GeoWorld.coverCells(col("lon0"), col("lat0"), col("lon1"), col("lat1"), CellIndex.RES_COARSE)))
-        .select("cell", "area_id", "wkb")
-      val joined =
-        if (salt <= 1)
-          pts.hint("shuffle_hash").join(areas, Seq("cell"))
-        else {
-          val p = pts.withColumn("salt", pmod(hash(col("pid")), lit(salt)))
-          val a = areas.withColumn("salt", explode(sequence(lit(0), lit(salt - 1))))
-          p.hint("shuffle_hash").join(a, Seq("cell", "salt"))
-        }
-      joined.filter(GeoCols.geoContainsPoint(col("wkb"), col("lon"), col("lat"))).count(); ()
+      graft.query.GeoQueries.pipLookupSalted(spark, sfDir, 4, salt).count(); ()
     }
   }
 

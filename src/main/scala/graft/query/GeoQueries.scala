@@ -17,7 +17,8 @@ import graft.geom.GeoCols
  * Queries.scala:304-341). In Spark the cell equi-join is either a broadcast
  * hash join (small build side — admin boundaries) or a cell-partitioned
  * shuffle hash join (both sides large), and the refine predicate runs only on
- * candidate pairs.
+ * candidate pairs. The broadcast form is [[SpatialJoin]]; the ring joins
+ * (radius, kNN) build their cover on the probe side instead.
  */
 object GeoQueries {
 
@@ -104,10 +105,14 @@ object GeoQueries {
 
   // ------------------------------------------------------------------ PIP
 
-  /** Areas of one admin level with their exploded cover-cell join keys. */
-  private[graft] def areaCells(spark: SparkSession, sfDir: String, level: Int, res: Int): DataFrame =
+  /** Areas of one admin level. */
+  private def areasAt(spark: SparkSession, sfDir: String, level: Int): DataFrame =
     GeoWorld.areas(spark, sfDir).filter(col("level") === level)
-      .withColumn("cell", explode(GeoWorld.coverCells(col("lon0"), col("lat0"), col("lon1"), col("lat1"), res)))
+
+  /** Area rows as a [[SpatialJoin.within]] side: bbox, geometry and the id
+    * renamed to `id`, so child and parent payloads never collide. */
+  private def shapes(areas: DataFrame, id: String): DataFrame =
+    areas.select(col("area_id").as(id), col("lon0"), col("lat0"), col("lon1"), col("lat1"), col("wkb"))
 
   /**
    * Point-in-polygon admin lookup (the reference's flagship Q3,
@@ -120,11 +125,7 @@ object GeoQueries {
    */
   def pipLookup(spark: SparkSession, sfDir: String, level: Int = 4): DataFrame = {
     init(spark)
-    val pts = GeoWorld.points(spark, sfDir)
-      .withColumn("cell", CellFunctions.zcell(col("lon"), col("lat"), lit(RES_COARSE)))
-    val ac = areaCells(spark, sfDir, level, RES_COARSE)
-    pts.join(broadcast(ac), "cell")
-      .filter(GeoCols.geoContainsPoint(col("wkb"), col("lon"), col("lat")))
+    SpatialJoin.pip(GeoWorld.points(spark, sfDir), areasAt(spark, sfDir, level), RES_COARSE)
       .select(col("pid"), col("area_id"), col("area_name"))
   }
 
@@ -144,11 +145,11 @@ object GeoQueries {
     val pts = GeoWorld.points(spark, sfDir)
       .withColumn("cell", CellFunctions.zcell(col("lon"), col("lat"), lit(RES_COARSE)))
       .withColumn("salt", pmod(hash(col("pid")), lit(salt)))
-    val ac = areaCells(spark, sfDir, level, RES_COARSE)
+    val ac = SpatialJoin.cover(areasAt(spark, sfDir, level), RES_COARSE)
       .withColumn("salt", explode(sequence(lit(0), lit(salt - 1))))
     pts.hint("shuffle_hash")
       .join(ac, Seq("cell", "salt"))
-      .filter(GeoCols.geoContainsPoint(col("wkb"), col("lon"), col("lat")))
+      .filter(SpatialJoin.containsPoint)
       .select(col("pid"), col("area_id"), col("area_name"))
   }
 
@@ -171,16 +172,10 @@ object GeoQueries {
    */
   def reverseGeocode(spark: SparkSession, sfDir: String): DataFrame = {
     init(spark)
-    val pts = GeoWorld.points(spark, sfDir)
-      .withColumn("cell", CellFunctions.zcell(col("lon"), col("lat"), lit(RES_COARSE)))
-    val nat = areaCells(spark, sfDir, 4, RES_COARSE)
-      .select(col("cell"), col("wkb").as("nwkb"), col("area_name").as("nation"))
-    val dis = areaCells(spark, sfDir, 8, RES_COARSE)
-      .select(col("cell"), col("wkb").as("dwkb"), col("area_name").as("district"))
-    pts.join(broadcast(nat), "cell")
-      .filter(GeoCols.geoContainsPoint(col("nwkb"), col("lon"), col("lat")))
-      .join(broadcast(dis), "cell")
-      .filter(GeoCols.geoContainsPoint(col("dwkb"), col("lon"), col("lat")))
+    def named(level: Int, as: String) =
+      areasAt(spark, sfDir, level).withColumnRenamed("area_name", as).drop("area_id", "level")
+    val nat = SpatialJoin.pip(GeoWorld.points(spark, sfDir), named(4, "nation"), RES_COARSE)
+    SpatialJoin.pip(nat, named(8, "district"), RES_COARSE)
       .select(col("pid"), col("nation"), col("district"),
         concat(col("nation"), lit("/"), col("district")).as("path"))
   }
@@ -213,14 +208,8 @@ object GeoQueries {
    */
   def containmentJoin(spark: SparkSession, sfDir: String, childLevel: Int = 6, parentLevel: Int = 4): DataFrame = {
     init(spark)
-    val child = GeoWorld.areas(spark, sfDir).filter(col("level") === childLevel)
-      .select(col("area_id").as("child_id"), col("wkb").as("child_wkb"),
-        CellFunctions.zcell((col("lon0") + col("lon1")) / 2.0, (col("lat0") + col("lat1")) / 2.0,
-          lit(RES_COARSE)).as("cell"))
-    val parent = areaCells(spark, sfDir, parentLevel, RES_COARSE)
-      .select(col("area_id").as("parent_id"), col("wkb").as("parent_wkb"), col("cell"))
-    child.join(broadcast(parent), "cell")
-      .filter(GeoCols.geoWithin(col("child_wkb"), col("parent_wkb")))
+    SpatialJoin.within(shapes(areasAt(spark, sfDir, childLevel), "child_id"),
+      shapes(areasAt(spark, sfDir, parentLevel), "parent_id"), RES_COARSE)
       .select(col("child_id"), col("parent_id"))
   }
 
@@ -257,14 +246,7 @@ object GeoQueries {
   private def overlayWithin(spark: SparkSession, sfDir: String,
       cands: DataFrame, idName: String): DataFrame = {
     init(spark)
-    val c = cands.select(col("area_id").as(idName), col("wkb").as("cand_wkb"),
-      CellFunctions.zcell((col("lon0") + col("lon1")) / 2.0, (col("lat0") + col("lat1")) / 2.0,
-        lit(RES_COARSE)).as("cell"))
-    val state = areaCells(spark, sfDir, 4, RES_COARSE)
-      .select(col("area_id").as("state_id"), col("wkb").as("state_wkb"), col("cell"))
-    c.join(broadcast(state), "cell")
-      .filter(GeoCols.geoWithin(col("cand_wkb"), col("state_wkb")))
-      .withColumn("fuzzy", !GeoCols.geoWithinExact(col("cand_wkb"), col("state_wkb")))
+    SpatialJoin.within(shapes(cands, idName), shapes(areasAt(spark, sfDir, 4), "state_id"), RES_COARSE)
       .select(col(idName), col("state_id"), col("fuzzy"))
   }
 
@@ -335,13 +317,7 @@ object GeoQueries {
   /** [[pipEnclave]] over an injected point table (scale probes). */
   def pipEnclaveOf(spark: SparkSession, sfDir: String, points: DataFrame): DataFrame = {
     init(spark)
-    val pts = points
-      .withColumn("cell", CellFunctions.zcell(col("lon"), col("lat"), lit(RES_COARSE)))
-    val ec = GeoWorld.enclaves(spark, sfDir)
-      .withColumn("cell", explode(GeoWorld.coverCells(col("lon0"), col("lat0"), col("lon1"), col("lat1"), RES_COARSE)))
-      .select(col("cell"), col("area_id"), col("area_name"), col("wkb"))
-    pts.join(broadcast(ec), "cell")
-      .filter(GeoCols.geoContainsPoint(col("wkb"), col("lon"), col("lat")))
+    SpatialJoin.pip(points, GeoWorld.enclaves(spark, sfDir), RES_COARSE)
       .select(col("pid"), col("area_id"), col("area_name"))
   }
 
@@ -363,16 +339,8 @@ object GeoQueries {
    */
   def enclaveWithin(spark: SparkSession, sfDir: String): DataFrame = {
     init(spark)
-    val c = GeoWorld.enclaveProbes(spark, sfDir)
-      .select(col("area_id").as("probe_id"), col("wkb").as("probe_wkb"),
-        CellFunctions.zcell((col("lon0") + col("lon1")) / 2.0, (col("lat0") + col("lat1")) / 2.0,
-          lit(RES_COARSE)).as("cell"))
-    val donut = GeoWorld.enclaves(spark, sfDir)
-      .withColumn("cell", explode(GeoWorld.coverCells(col("lon0"), col("lat0"), col("lon1"), col("lat1"), RES_COARSE)))
-      .select(col("cell"), col("area_id").as("enclave_id"), col("wkb").as("donut_wkb"))
-    c.join(broadcast(donut), "cell")
-      .filter(GeoCols.geoWithin(col("probe_wkb"), col("donut_wkb")))
-      .withColumn("fuzzy", !GeoCols.geoWithinExact(col("probe_wkb"), col("donut_wkb")))
+    SpatialJoin.within(shapes(GeoWorld.enclaveProbes(spark, sfDir), "probe_id"),
+      shapes(GeoWorld.enclaves(spark, sfDir), "enclave_id"), RES_COARSE)
       .select(col("probe_id"), col("enclave_id"), col("fuzzy"))
   }
 
@@ -389,13 +357,7 @@ object GeoQueries {
    */
   def pipBaarle(spark: SparkSession, sfDir: String): DataFrame = {
     init(spark)
-    val pr = GeoWorld.baarleProbes(spark, sfDir)
-      .withColumn("cell", CellFunctions.zcell(col("lon"), col("lat"), lit(RES_COARSE)))
-    val ba = GeoWorld.baarles(spark, sfDir)
-      .withColumn("cell", explode(GeoWorld.coverCells(col("lon0"), col("lat0"), col("lon1"), col("lat1"), RES_COARSE)))
-      .select(col("cell"), col("area_id"), col("wkb"))
-    pr.join(broadcast(ba), "cell")
-      .filter(GeoCols.geoContainsPoint(col("wkb"), col("lon"), col("lat")))
+    SpatialJoin.pip(GeoWorld.baarleProbes(spark, sfDir), GeoWorld.baarles(spark, sfDir), RES_COARSE)
       .select(col("bp_id"), col("j"), col("area_id"))
   }
 
@@ -456,16 +418,10 @@ object GeoQueries {
   /** [[datelineBbox]] over an injected point table (scale probes). */
   def datelineBboxOf(spark: SparkSession, points: DataFrame): DataFrame = {
     init(spark)
-    import spark.implicits._
     val (lo0, la0, lo1, la1) = DATELINE_BBOX
     val wlonRaw = col("lon") + lit(DATELINE_SHIFT)
     val wlon = when(wlonRaw >= 180.0, wlonRaw - 360.0).otherwise(wlonRaw)
-    val pts = points
-      .withColumn("wlon", wlon)
-      .withColumn("cell", CellFunctions.zcell(col("wlon"), col("lat"), lit(RES_MID)))
-    val cells = CellIndex.rectCover(lo0, la0, lo1, la1, RES_MID).toSeq.toDF("cell")
-    pts.join(broadcast(cells), "cell")
-      .filter((col("wlon") > lo0 || col("wlon") < lo1) && col("lat") > la0 && col("lat") < la1)
+    SpatialJoin.bbox(points.withColumn("wlon", wlon), "wlon", lo0, la0, lo1, la1, RES_MID)
       .select(col("pid"), col("wlon"), col("lat"))
   }
 
@@ -484,12 +440,8 @@ object GeoQueries {
     * resolution then exactly refined. */
   def poiFromArea(spark: SparkSession, sfDir: String, tagK: String = "amenity", tagV: String = "cat_3"): DataFrame = {
     init(spark)
-    val pts = GeoWorld.points(spark, sfDir)
-      .filter(col("tag_k") === tagK && col("tag_v") === tagV)
-      .withColumn("cell", CellFunctions.zcell(col("lon"), col("lat"), lit(RES_MID)))
-    val ac = areaCells(spark, sfDir, 4, RES_MID)
-    pts.join(broadcast(ac), "cell")
-      .filter(GeoCols.geoContainsPoint(col("wkb"), col("lon"), col("lat")))
+    val pts = GeoWorld.points(spark, sfDir).filter(col("tag_k") === tagK && col("tag_v") === tagV)
+    SpatialJoin.pip(pts, areasAt(spark, sfDir, 4), RES_MID)
       .select(col("area_id"), col("pid"), col("name"))
   }
 
@@ -958,26 +910,38 @@ object GeoQueries {
    */
   def areaPolyfill(spark: SparkSession, sfDir: String, level: Int = 4, res: Int = 10): DataFrame = {
     init(spark)
-    val n = 1L << res
-    val w = CellIndex.LON_SPAN / n
-    val h = CellIndex.LAT_SPAN / n
-    def ixCol(lon: Column): Column =
-      least(greatest(floor((lon - CellIndex.LON_MIN) / CellIndex.LON_SPAN * n).cast("long"), lit(0L)), lit(n - 1))
-    def iyCol(lat: Column): Column =
-      least(greatest(floor((lat - CellIndex.LAT_MIN) / CellIndex.LAT_SPAN * n).cast("long"), lit(0L)), lit(n - 1))
-    val cells = GeoWorld.areas(spark, sfDir).filter(col("level") === level)
+    val dia = areasAt(spark, sfDir, level)
       .select(col("area_id"), col("lon0"), col("lat0"), col("lon1"), col("lat1"),
         ((col("lon0") + col("lon1")) / 2.0).as("cx"),
         ((col("lat0") + col("lat1")) / 2.0).as("cy"),
         ((col("lon1") - col("lon0")) / 2.0).as("ha"),
         ((col("lat1") - col("lat0")) / 2.0).as("hb"))
-      .withColumn("ix", explode(sequence(ixCol(col("lon0")), ixCol(col("lon1")))))
-      .withColumn("iy", explode(sequence(iyCol(col("lat0")), iyCol(col("lat1")))))
+    polyfillGrid(dia, res) { (x, y, w, h) =>
+      val dx = greatest(lit(0.0), x - col("cx"), col("cx") - (x + w)) / col("ha")
+      val dy = greatest(lit(0.0), y - col("cy"), col("cy") - (y + h)) / col("hb")
+      dx + dy <= 1.0
+    }
+  }
+
+  /** The polyfill grid shared by [[areaPolyfill]], [[enclavePolyfill]] and
+    * [[baarlePolyfill]]: every `res` cell of each row's bbox, kept where
+    * `keep(x, y, w, h)` holds for the cell rect with lower-left corner
+    * (x, y) and size w × h; emits (area_id, cell) encoded at the cell
+    * centre. Map-only explode over a dim-sized input. */
+  private def polyfillGrid(rows: DataFrame, res: Int)(keep: (Column, Column, Double, Double) => Column): DataFrame = {
+    val n = 1L << res
+    val w = CellIndex.LON_SPAN / n
+    val h = CellIndex.LAT_SPAN / n
+    def index(v: Column, min: Double, span: Double): Column =
+      least(greatest(floor((v - min) / span * n).cast("long"), lit(0L)), lit(n - 1))
+    def ix(lon: Column) = index(lon, CellIndex.LON_MIN, CellIndex.LON_SPAN)
+    def iy(lat: Column) = index(lat, CellIndex.LAT_MIN, CellIndex.LAT_SPAN)
+    rows
+      .withColumn("ix", explode(sequence(ix(col("lon0")), ix(col("lon1")))))
+      .withColumn("iy", explode(sequence(iy(col("lat0")), iy(col("lat1")))))
       .withColumn("clon0", lit(CellIndex.LON_MIN) + col("ix") * w)
       .withColumn("clat0", lit(CellIndex.LAT_MIN) + col("iy") * h)
-    val dx = greatest(lit(0.0), col("clon0") - col("cx"), col("cx") - (col("clon0") + w)) / col("ha")
-    val dy = greatest(lit(0.0), col("clat0") - col("cy"), col("cy") - (col("clat0") + h)) / col("hb")
-    cells.filter(dx + dy <= 1.0)
+      .filter(keep(col("clon0"), col("clat0"), w, h))
       .select(col("area_id"),
         CellFunctions.zcell(col("clon0") + w / 2, col("clat0") + h / 2, lit(res)).as("cell"))
   }
@@ -1028,23 +992,9 @@ object GeoQueries {
    */
   def enclavePolyfill(spark: SparkSession, sfDir: String, res: Int = 10): DataFrame = {
     init(spark)
-    val n = 1L << res
-    val w = CellIndex.LON_SPAN / n
-    val h = CellIndex.LAT_SPAN / n
-    def ixCol(lon: Column): Column =
-      least(greatest(floor((lon - CellIndex.LON_MIN) / CellIndex.LON_SPAN * n).cast("long"), lit(0L)), lit(n - 1))
-    def iyCol(lat: Column): Column =
-      least(greatest(floor((lat - CellIndex.LAT_MIN) / CellIndex.LAT_SPAN * n).cast("long"), lit(0L)), lit(n - 1))
-    val cells = GeoWorld.enclaves(spark, sfDir)
-      .withColumn("ix", explode(sequence(ixCol(col("lon0")), ixCol(col("lon1")))))
-      .withColumn("iy", explode(sequence(iyCol(col("lat0")), iyCol(col("lat1")))))
-      .withColumn("clon0", lit(CellIndex.LON_MIN) + col("ix") * w)
-      .withColumn("clat0", lit(CellIndex.LAT_MIN) + col("iy") * h)
-    val insideHole = col("clon0") > col("hlon0") && col("clon0") + w < col("hlon1") &&
-      col("clat0") > col("hlat0") && col("clat0") + h < col("hlat1")
-    cells.filter(!insideHole)
-      .select(col("area_id"),
-        CellFunctions.zcell(col("clon0") + w / 2, col("clat0") + h / 2, lit(res)).as("cell"))
+    polyfillGrid(GeoWorld.enclaves(spark, sfDir), res) { (x, y, w, h) =>
+      !(x > col("hlon0") && x + w < col("hlon1") && y > col("hlat0") && y + h < col("hlat1"))
+    }
   }
 
   def enclavePolyfillSql(res: Int = 10): String = {
@@ -1085,28 +1035,13 @@ object GeoQueries {
    */
   def baarlePolyfill(spark: SparkSession, sfDir: String, res: Int = 10): DataFrame = {
     init(spark)
-    val n = 1L << res
-    val w = CellIndex.LON_SPAN / n
-    val h = CellIndex.LAT_SPAN / n
-    def ixCol(lon: Column): Column =
-      least(greatest(floor((lon - CellIndex.LON_MIN) / CellIndex.LON_SPAN * n).cast("long"), lit(0L)), lit(n - 1))
-    def iyCol(lat: Column): Column =
-      least(greatest(floor((lat - CellIndex.LAT_MIN) / CellIndex.LAT_SPAN * n).cast("long"), lit(0L)), lit(n - 1))
-    val cells = GeoWorld.baarles(spark, sfDir)
-      .withColumn("ix", explode(sequence(ixCol(col("lon0")), ixCol(col("lon1")))))
-      .withColumn("iy", explode(sequence(iyCol(col("lat0")), iyCol(col("lat1")))))
-      .withColumn("clon0", lit(CellIndex.LON_MIN) + col("ix") * w)
-      .withColumn("clat0", lit(CellIndex.LAT_MIN) + col("iy") * h)
-    def insideRect(x0: Column, y0: Column, x1: Column, y1: Column) =
-      col("clon0") > x0 && col("clon0") + w < x1 && col("clat0") > y0 && col("clat0") + h < y1
-    def overlapsRect(x0: Column, y0: Column, x1: Column, y1: Column) =
-      col("clon0") < x1 && col("clon0") + w > x0 && col("clat0") < y1 && col("clat0") + h > y0
-    val insideA = insideRect(col("alon0"), col("alat0"), col("alon1"), col("alat1"))
-    val insideB = insideRect(col("blon0"), col("blat0"), col("blon1"), col("blat1"))
-    val onIsland = overlapsRect(col("ilon0"), col("ilat0"), col("ilon1"), col("ilat1"))
-    cells.filter((!insideA || onIsland) && !insideB)
-      .select(col("area_id"),
-        CellFunctions.zcell(col("clon0") + w / 2, col("clat0") + h / 2, lit(res)).as("cell"))
+    polyfillGrid(GeoWorld.baarles(spark, sfDir), res) { (x, y, w, h) =>
+      def inside(r: String) =
+        x > col(s"${r}lon0") && x + w < col(s"${r}lon1") && y > col(s"${r}lat0") && y + h < col(s"${r}lat1")
+      def overlaps(r: String) =
+        x < col(s"${r}lon1") && x + w > col(s"${r}lon0") && y < col(s"${r}lat1") && y + h > col(s"${r}lat0")
+      (!inside("a") || overlaps("i")) && !inside("b")
+    }
   }
 
   def baarlePolyfillSql(res: Int = 10): String = {

@@ -2,9 +2,8 @@ package graft.query
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.cell.{CellFunctions, CellIndex, CellSql}
+import graft.cell.CellIndex
 import graft.gen.GeoWorld
-import graft.geom.GeoCols
 
 /**
  * The POI catalog as a DATA table, not a type per category — the reference
@@ -77,13 +76,8 @@ object PoiCatalog {
   def poisOf(spark: SparkSession, sfDir: String, poiName: String = "gym", level: Int = 4): DataFrame = {
     GeoWorld.registerUdfs(spark)
     val cat = df(spark).filter(col("poi_name") === poiName)
-    val pts = GeoWorld.points(spark, sfDir)
-      .join(broadcast(cat), Seq("tag_k", "tag_v"))
-      .withColumn("cell", CellFunctions.zcell(col("lon"), col("lat"), lit(CellIndex.RES_MID)))
-    val ac = GeoWorld.areas(spark, sfDir).filter(col("level") === level)
-      .withColumn("cell", explode(GeoWorld.coverCells(col("lon0"), col("lat0"), col("lon1"), col("lat1"), CellIndex.RES_MID)))
-    pts.join(broadcast(ac), "cell")
-      .filter(GeoCols.geoContainsPoint(col("wkb"), col("lon"), col("lat")))
+    val pts = GeoWorld.points(spark, sfDir).join(broadcast(cat), Seq("tag_k", "tag_v"))
+    SpatialJoin.pip(pts, GeoWorld.areas(spark, sfDir).filter(col("level") === level), CellIndex.RES_MID)
       .select(col("area_id"), col("poi_name"), col("pid"), col("name"))
   }
 

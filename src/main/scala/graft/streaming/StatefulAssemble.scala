@@ -48,26 +48,9 @@ object StatefulAssemble {
     * last arrival / the watermark is dead-lettered. */
   final val TIMEOUT_GAP_MS: Long = 60 * 1000L
 
-  private val HEX = "0123456789abcdef".toCharArray
-
-  private def md5hex(s: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // manual hex (bit-identical): per-byte f"%02x" runs String.format —
-    // Formatter parse + regex per byte — measured hot in the r8 JFR profile
-    val out = new Array[Char](32)
-    var i = 0
-    while (i < d.length) {
-      val b = d(i) & 0xff
-      out(i * 2) = HEX(b >>> 4); out(i * 2 + 1) = HEX(b & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
-
   /** The batch-identical fingerprint of one doc's (offset-ordered) spans. */
   def fingerprint(spans: Seq[(Int, String, String, String)]): String =
-    md5hex(spans.sortBy(_._1)
+    graft.text.TextOps.md5hex(spans.sortBy(_._1)
       .map { case (off, kind, text, ref) => s"$kind|$text|$ref|$off" }
       .mkString(";"))
 

@@ -183,16 +183,12 @@ object StreamNormalize {
    * aggregation itself, bounded by the watermark to open windows × areas.
    * At 100 TB/day the stream side never shuffles before the final agg.
    *
-   * `areaDim` is [[graft.query.GeoQueries.areaCells]] output (area rows
-   * exploded by coarse cover cell); candidates equi-join on the coarse
-   * cell and are refined with the exact containment predicate — identical
-   * semantics to the batch PIP lookup.
+   * `areas` are admin-area rows (`area_id`, bbox, `wkb`); the join is
+   * [[graft.query.SpatialJoin.pip]] at the coarse cover resolution —
+   * identical semantics to the batch PIP lookup.
    */
-  def enrichedAreaCounts(docs: DataFrame, areaDim: DataFrame): DataFrame =
-    normalize(docs)
-      .withColumn("cell", CellFunctions.zcell(col("lon"), col("lat"), lit(CellIndex.RES_COARSE)))
-      .join(broadcast(areaDim.select("cell", "area_id", "wkb")), "cell")
-      .filter(graft.geom.GeoCols.geoContainsPoint(col("wkb"), col("lon"), col("lat")))
+  def enrichedAreaCounts(docs: DataFrame, areas: DataFrame): DataFrame =
+    graft.query.SpatialJoin.pip(normalize(docs), areas, CellIndex.RES_COARSE)
       .transform(withEventTime)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "5 minutes"), col("area_id"))
@@ -203,9 +199,7 @@ object StreamNormalize {
     * cover resolution) — the driver's `q_stream_enrich` entry point. */
   def enrichedAreaCountsOf(spark: SparkSession, sfDir: String): DataFrame = {
     GeoWorld.registerUdfs(spark)
-    enrichedAreaCounts(
-      GeoWorld.docs(spark, sfDir),
-      graft.query.GeoQueries.areaCells(spark, sfDir, level = 4, CellIndex.RES_COARSE))
+    enrichedAreaCounts(GeoWorld.docs(spark, sfDir), GeoWorld.areas(spark, sfDir).filter(col("level") === 4))
   }
 
   /** DuckDB twin of [[enrichedAreaCounts]]: rect containment is exact

@@ -31,9 +31,18 @@ object TextOps {
 
   // ---------------------------------------------------------------- corpus
 
+  /** Source documents plus the derived near (`doc_id + 10000`) and exact
+    * (`doc_id + 20000`) duplicates. The derived ids are unique only while
+    * every source `doc_id < 10000`; a larger one would collide and fan out
+    * duplicate pair rows, so it fails the query instead. */
   def corpus(spark: SparkSession, sfDir: String): DataFrame = {
+    // a projection, not a filter: the optimizer infers filter predicates
+    // across doc_id equi-joins and would apply the check to derived ids
+    val docId = when(col("doc_id") >= 10000, raise_error(concat(
+      lit("documents doc_id "), col("doc_id").cast("string"),
+      lit(" >= 10000 collides with the derived duplicate ids")))).otherwise(col("doc_id"))
     val d = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text", "lang", "source")
+      .select(docId.as("doc_id"), col("text"), col("lang"), col("source"))
     val near = d.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 10000).as("doc_id"),
         expr("substr(text, instr(text, ' ') + 1)").as("text"),
@@ -298,7 +307,8 @@ object TextOps {
 
   private val HEX = "0123456789abcdef".toCharArray
 
-  private def md5hex(s: String): String = {
+  /** Lowercase hex md5 of the UTF-8 bytes (DuckDB's `md5`). */
+  private[graft] def md5hex(s: String): String = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // manual hex: a per-byte f"%02x" ran String.format (Formatter parse +

@@ -96,9 +96,21 @@ object VectorOps {
 
   private def normHof(a: Column): Column = sqrt(dotHof(a, a))
 
-  def vectors(spark: SparkSession, sfDir: String): DataFrame =
+  /** The corpus vectors (and, through it, every probe set). Each embedding
+    * must be non-null with exactly [[DIM]] components: a null one would NPE
+    * inside the kernels and a short one would silently score and bucket on
+    * fewer dimensions, so either fails the query naming its `vec_id`. */
+  def vectors(spark: SparkSession, sfDir: String): DataFrame = {
+    val e = col("embedding")
+    val id = col("vec_id").cast("string")
+    val checked =
+      when(e.isNull, raise_error(concat(lit("null embedding at vec_id "), id)))
+        .when(size(e) =!= DIM, raise_error(concat(lit("embedding at vec_id "), id,
+          lit(" has "), size(e).cast("string"), lit(s" components, expected $DIM"))))
+        .otherwise(e)
     spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), emb(col("embedding")).as("v"), col("label"))
+      .select(col("vec_id"), emb(checked).as("v"), col("label"))
+  }
 
   /** Corpus cardinality for sizing dials (planesFor): a bare count on the
     * parquet — answered from footer row counts, no data pages — memoized

@@ -76,7 +76,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("round-4 queries: every join is a broadcast-hash equi-join (no cartesian / BNL / sort-merge)") {
-    for (q <- Seq("q_relation_mixed", "q_fuzzy_invalid", "q_geojson_area", "q_geojson_dispatch")) {
+    for (q <- Seq("q_relation_mixed", "q_geojson_area", "q_geojson_dispatch")) {
       val p = plan(SparkEntry.queries(q)(spark, sfDir))
       assert(!p.contains("CartesianProduct"), s"$q:\n${p.take(600)}")
       assert(!p.contains("BroadcastNestedLoop"), s"$q:\n${p.take(600)}")
@@ -88,7 +88,7 @@ class PlanShapeSpec extends SparkSpec {
     val oneRowAttach = Set("q_text_unigram_lm", "q_sample_temperature")
     for (q <- Seq("q_text_para_dedup", "q_text_unigram_lm", "q_sample_temperature",
         "q_shard_pack", "q_media_caption", "q_index_upsert", "q_area_polyfill",
-        "q_text_ngram_mine", "q_revgeo", "q_semantic_search")) {
+        "q_text_ngram_mine", "q_semantic_search")) {
       val p = plan(SparkEntry.queries(q)(spark, sfDir))
       assert(!p.contains("CartesianProduct"), s"$q:\n${p.take(600)}")
       assert(!p.contains("SortMergeJoin"), s"$q:\n${p.take(600)}")
@@ -99,18 +99,26 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  test("round-6 queries: enclave PIP/within are broadcast-hash joins, no cartesian/BNL/sort-merge") {
-    for (q <- Seq("q_pip_enclave", "q_enclave_within", "q_dateline_bbox")) {
-      val p = plan(SparkEntry.queries(q)(spark, sfDir))
+  /** Every caller of the filter-and-refine operator ([[graft.query.SpatialJoin]]):
+    * the catalog queries, plus the headline bench job. */
+  private val filterAndRefine: Seq[(String, () => org.apache.spark.sql.DataFrame)] =
+    Seq("q_pip_nation", "q_pip_district", "q_revgeo", "q_poi_area", "q_poi_catalog",
+      "q_containment", "q_area_chain", "q_metro_fuzzy", "q_fuzzy_invalid", "q_pip_enclave",
+      "q_enclave_within", "q_pip_baarle", "q_dateline_bbox", "q_stream_enrich")
+      .map(q => q -> (() => SparkEntry.queries(q)(spark, sfDir))) :+
+      ("Headline.job" -> (() => graft.bench.Headline.job(spark, sfDir)))
+
+  test("filter-and-refine queries: broadcast-hash candidate join, no SMJ/cartesian/BNL") {
+    for ((q, df) <- filterAndRefine) {
+      val p = plan(df())
       assert(p.contains("BroadcastHashJoin"), s"$q:\n${p.take(600)}")
-      assert(!p.contains("CartesianProduct"), s"$q:\n${p.take(600)}")
-      assert(!p.contains("BroadcastNestedLoop"), s"$q:\n${p.take(600)}")
-      assert(!p.contains("SortMergeJoin"), s"$q:\n${p.take(600)}")
+      for (op <- Seq("SortMergeJoin", "CartesianProduct", "BroadcastNestedLoop"))
+        assert(!p.contains(op), s"$q has $op:\n${p.take(600)}")
     }
   }
 
   test("ranked search / baarle newcomers: no cartesian / BNL / sort-merge anywhere") {
-    for (q <- Seq("q_name_ranked", "q_name_indexed", "q_pip_baarle", "q_baarle_polyfill", "q_baarle_stats")) {
+    for (q <- Seq("q_name_ranked", "q_name_indexed", "q_baarle_polyfill", "q_baarle_stats")) {
       val p = plan(SparkEntry.queries(q)(spark, sfDir))
       assert(!p.contains("CartesianProduct"), s"$q:\n${p.take(600)}")
       assert(!p.contains("BroadcastNestedLoop"), s"$q:\n${p.take(600)}")

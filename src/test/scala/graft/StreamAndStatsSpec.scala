@@ -181,9 +181,9 @@ class StreamAndStatsSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-enrich").toString
     val docs = GeoWorld.docs(spark, sfDir)
     docs.write.mode("overwrite").parquet(s"$dir/in")
-    val areaDim = graft.query.GeoQueries.areaCells(spark, sfDir, 4, graft.cell.CellIndex.RES_COARSE)
+    val areas = GeoWorld.areas(spark, sfDir).filter(col("level") === 4)
     val stream = StreamNormalize.enrichedAreaCounts(
-      spark.readStream.schema(docs.schema).parquet(s"$dir/in"), areaDim)
+      spark.readStream.schema(docs.schema).parquet(s"$dir/in"), areas)
     assert(stream.isStreaming, "the enrich join must stay a streaming plan")
     val q = stream.writeStream
       .format("memory").queryName("enrich").outputMode("complete")
@@ -192,7 +192,7 @@ class StreamAndStatsSpec extends SparkSpec {
     q.awaitTermination(120000)
     val streamed = spark.table("enrich").collect()
       .map(r => (r.getTimestamp(0), r.getLong(1), r.getLong(2))).toSet
-    val batch = StreamNormalize.enrichedAreaCounts(docs, areaDim).collect()
+    val batch = StreamNormalize.enrichedAreaCounts(docs, areas).collect()
       .map(r => (r.getTimestamp(0), r.getLong(1), r.getLong(2))).toSet
     assert(streamed === batch)
     assert(streamed.map(_._1).size > 1, "multiple event-time windows")

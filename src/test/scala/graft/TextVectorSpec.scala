@@ -291,4 +291,32 @@ class TextVectorSpec extends SparkSpec {
     val preds = l.select("pred_lang").distinct().collect().map(_.getString(0)).toSet
     assert(preds.subsetOf(Set("en", "de", "es", "fr", "und")))
   }
+
+  /** Full message chain of a failed action (executor errors arrive wrapped). */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(String.valueOf(_)).mkString("\n")
+
+  test("a null or wrong-length embedding fails the query naming its vec_id") {
+    import spark.implicits._
+    val good = (0L until 4L).map(i => (i, Option(Seq.fill(VectorOps.DIM)(0.25f + i)), 1))
+    for ((bad, what) <- Seq(
+        (None, "null embedding at vec_id 7"),
+        (Some(Seq.fill(VectorOps.DIM - 3)(0.5f)), s"embedding at vec_id 7 has ${VectorOps.DIM - 3} components"))) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-badvec").toString
+      (good :+ ((7L, bad, 2))).toDF("vec_id", "embedding", "label")
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      val e = intercept[Exception](VectorOps.cosineTopK(spark, dir).collect())
+      assert(messages(e).contains(what), messages(e).take(1200))
+    }
+  }
+
+  test("corpus rejects a source doc_id >= 10000 (its derived duplicate ids would collide)") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-bigdoc").toString
+    Seq((7L, "alpha beta gamma", "en", "web", 16L), (10007L, "beta gamma delta", "en", "web", 16L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val e = intercept[Exception](TextOps.exactDedup(spark, dir).collect())
+    assert(messages(e).contains("documents doc_id 10007 >= 10000"), messages(e).take(1200))
+  }
 }
